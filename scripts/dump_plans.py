@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named corpus queries into plans/r15/.
+"""Dump .explain("formatted") for named corpus queries.
 
-Usage: python scripts/dump_plans_r15.py <suffix> q1,q2,...
-Writes plans/r15/<query>_<suffix>.txt (suffix = before|after).
+Usage: python scripts/dump_plans.py <out_dir> <suffix> q1,q2,...
+Writes <out_dir>/<query>_<suffix>.txt (suffix = before|after), e.g.
+``python scripts/dump_plans.py /tmp/plans before rfm_segments``.
 """
 
 from __future__ import annotations
@@ -21,14 +22,10 @@ from us_weather_energy_analysis_pipeline_spark.session import get_spark
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2].split(",")
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _ensure_loaded()
     spark = get_spark("dump-plans", master=os.environ.get("PLANS_MASTER", "local[4]"))
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15"
-    )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         q = REGISTRY[name]

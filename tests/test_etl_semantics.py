@@ -24,12 +24,33 @@ from us_weather_energy_analysis_pipeline_spark.plans.etl import (
     resolve_date_range,
 )
 from us_weather_energy_analysis_pipeline_spark.quality.checks import quality_report
-from us_weather_energy_analysis_pipeline_spark.sources.eia import eia_records_df
-from us_weather_energy_analysis_pipeline_spark.sources.noaa import noaa_records_df
+from us_weather_energy_analysis_pipeline_spark.sources.eia import read_eia_landing
+from us_weather_energy_analysis_pipeline_spark.sources.fetch import land_json, landing_path
+from us_weather_energy_analysis_pipeline_spark.sources.noaa import read_noaa_landing
 
 
 def _scalar(spark, col):
     return spark.range(1).select(col.alias("v")).collect()[0]["v"]
+
+
+def _land(tmp_path, kind, payloads):
+    """Land {city: payload} as bronze JSON the way ``main.run_pipeline``
+    does; returns the landed file list."""
+    paths = []
+    for city, payload in payloads.items():
+        paths.append(
+            landing_path(str(tmp_path), kind, city, dt.date(2024, 1, 1), dt.date(2024, 1, 31))
+        )
+        land_json(payload, paths[-1])
+    return paths
+
+
+def _noaa(spark, tmp_path, payloads):
+    return read_noaa_landing(spark, _land(tmp_path, "weather", payloads))
+
+
+def _eia(spark, tmp_path, payloads):
+    return read_eia_landing(spark, _land(tmp_path, "energy", payloads))
 
 
 class TestScalars:
@@ -61,7 +82,7 @@ class TestScalars:
 
 
 class TestWeatherPipeline:
-    def test_conversion_through_pipeline(self, spark):
+    def test_conversion_through_pipeline(self, spark, tmp_path):
         """Reference T2 (test_pipeline.py:14-26): 2-record NOAA payload →
         °F within ±1 of 97/78, temp_avg_f present."""
         payload = {
@@ -70,14 +91,14 @@ class TestWeatherPipeline:
                 {"date": "2025-07-29T00:00:00", "datatype": "TMIN", "value": 25.6},
             ]
         }
-        out = process_weather(noaa_records_df(spark, {"Austin": payload})).collect()
+        out = process_weather(_noaa(spark, tmp_path, {"Austin": payload})).collect()
         assert len(out) == 1
         r = out[0]
         assert abs(r["temp_max_f"] - 97.0) < 1.0
         assert abs(r["temp_min_f"] - 78.1) < 1.0
         assert r["temp_avg_f"] == pytest.approx((r["temp_max_f"] + r["temp_min_f"]) / 2)
 
-    def test_duplicate_pairs_mean_and_imputation(self, spark):
+    def test_duplicate_pairs_mean_and_imputation(self, spark, tmp_path):
         """A1: duplicate (date, datatype) resolved by mean. N1: missing day
         inside the requested range imputed with the per-city mean of
         PRESENT values (computed after the spine join)."""
@@ -93,7 +114,7 @@ class TestWeatherPipeline:
         out = {
             r["date"]: r
             for r in process_weather(
-                noaa_records_df(spark, {"X": payload}), "2024-01-01", "2024-01-03"
+                _noaa(spark, tmp_path, {"X": payload}), "2024-01-01", "2024-01-03"
             ).collect()
         }
         assert len(out) == 3
@@ -104,7 +125,7 @@ class TestWeatherPipeline:
         # TMIN present values 32, 50 → mean 41
         assert out[dt.date(2024, 1, 2)]["temp_min_f"] == pytest.approx(41.0)
 
-    def test_one_sided_day_imputes_other_side(self, spark):
+    def test_one_sided_day_imputes_other_side(self, spark, tmp_path):
         """A date with only TMAX gets TMIN from the city mean."""
         payload = {
             "results": [
@@ -115,13 +136,65 @@ class TestWeatherPipeline:
         }
         out = {
             r["date"]: r
-            for r in process_weather(noaa_records_df(spark, {"X": payload})).collect()
+            for r in process_weather(_noaa(spark, tmp_path, {"X": payload})).collect()
         }
         assert out[dt.date(2024, 1, 1)]["temp_min_f"] == pytest.approx(41.0)
 
+    def test_empty_payload_leaves_city_out(self, spark, tmp_path):
+        """A city whose NOAA payload has no results gets no weather rows,
+        so it never enters the spine's key set and gold has no all-NULL
+        temperature rows for it."""
+        x = {
+            "results": [
+                {"date": "2024-01-01T00:00:00", "datatype": "TMAX", "value": 10.0},
+                {"date": "2024-01-01T00:00:00", "datatype": "TMIN", "value": 0.0},
+            ]
+        }
+        e = {"response": {"data": [{"period": "2024-01-01T00", "value": "5"}]}}
+        weather = process_weather(
+            _noaa(spark, tmp_path, {"X": x, "Empty": {"results": []}}),
+            "2024-01-01",
+            "2024-01-03",
+        )
+        energy = process_energy(
+            _eia(spark, tmp_path, {"X": e, "Empty": e}), "2024-01-01", "2024-01-03"
+        )
+        got = sorted(map(tuple, build_fact(weather, energy).collect()))
+        assert got == [
+            (dt.date(2024, 1, 1), "X", 50.0, 32.0, 41.0, 5.0),
+            (dt.date(2024, 1, 2), "X", 50.0, 32.0, 41.0, None),
+            (dt.date(2024, 1, 3), "X", 50.0, 32.0, 41.0, None),
+        ]
+
+    def test_quoted_value_keeps_its_number(self, spark, tmp_path):
+        """A quoted reading ("12.5") is read as 12.5 °C, not NULL."""
+        payload = {
+            "results": [
+                {"date": "2024-01-01T00:00:00", "datatype": "TMAX", "value": "12.5"},
+                {"date": "2024-01-01T00:00:00", "datatype": "TMIN", "value": 5.0},
+            ]
+        }
+        got = process_weather(_noaa(spark, tmp_path, {"X": payload})).collect()
+        assert [tuple(r) for r in got] == [(dt.date(2024, 1, 1), "X", 54.5, 41.0, 47.75)]
+
+    def test_garbage_value_reads_as_null(self, spark, tmp_path):
+        """A non-numeric reading becomes NULL (then per-city mean imputed),
+        like EIA's try_cast coercion."""
+        payload = {
+            "results": [
+                {"date": "2024-01-01T00:00:00", "datatype": "TMAX", "value": "n/a"},
+                {"date": "2024-01-02T00:00:00", "datatype": "TMAX", "value": 20.0},
+            ]
+        }
+        out = {
+            r["date"]: r["temp_max_f"]
+            for r in process_weather(_noaa(spark, tmp_path, {"X": payload})).collect()
+        }
+        assert out == {dt.date(2024, 1, 1): 68.0, dt.date(2024, 1, 2): 68.0}
+
 
 class TestEnergyPipeline:
-    def test_resample_zero_vs_null(self, spark):
+    def test_resample_zero_vs_null(self, spark, tmp_path):
         """A2 parity (SURVEY §7.3): day present-with-garbage → 0.0; day
         absent inside observed range → 0.0; day outside observed range but
         inside requested → NULL."""
@@ -140,7 +213,7 @@ class TestEnergyPipeline:
         out = {
             r["date"]: r["energy_demand_gwh"]
             for r in process_energy(
-                eia_records_df(spark, {"X": payload}), "2024-01-01", "2024-01-05"
+                _eia(spark, tmp_path, {"X": payload}), "2024-01-01", "2024-01-05"
             ).collect()
         }
         assert out[dt.date(2024, 1, 1)] == pytest.approx(200.0)
@@ -151,7 +224,7 @@ class TestEnergyPipeline:
 
 
 class TestFactAndQuality:
-    def _fact(self, spark):
+    def _fact(self, spark, tmp_path):
         w = {
             "results": [
                 {"date": "2024-01-01T00:00:00", "datatype": "TMAX", "value": 60.0},
@@ -165,14 +238,14 @@ class TestFactAndQuality:
             }
         }
         return build_fact(
-            process_weather(noaa_records_df(spark, {"X": w})),
-            process_energy(eia_records_df(spark, {"X": e})),
+            process_weather(_noaa(spark, tmp_path, {"X": w})),
+            process_energy(_eia(spark, tmp_path, {"X": e})),
         )
 
-    def test_quality_report_counts(self, spark):
+    def test_quality_report_counts(self, spark, tmp_path):
         """Reference T3 (test_pipeline.py:28-46): outlier + negative
         counted; zero missing; custom thresholds honored."""
-        fact = self._fact(spark)
+        fact = self._fact(spark, tmp_path)
         cfg = {"data_quality": {"temp_outlier_fahrenheit": {"max": 130, "min": -30}}}
         rep = quality_report(fact, cfg, now=dt.datetime(2024, 1, 10))
         assert rep["total_rows"] == 1

@@ -9,6 +9,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.main import run_pipeline
+from us_weather_energy_analysis_pipeline_spark.schemas import FACT_SCHEMA
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -57,3 +58,59 @@ def test_realtime_mode_single_day(spark, tmp_path):
     )
     assert report["total_rows"] == 1
     assert report["latest_date"] == dt.date(2024, 6, 30)
+
+
+def _gold_summary(spark, out_dir):
+    """(city, rows, Σtemp_max_f, Σtemp_min_f, Σenergy) per gold city."""
+    gold = spark.read.parquet(str(out_dir / "processed" / "weather_energy_parquet"))
+    return sorted(
+        tuple(r)
+        for r in gold.groupBy("city").agg(
+            F.count(F.lit(1)),
+            F.round(F.sum("temp_max_f"), 6),
+            F.round(F.sum("temp_min_f"), 6),
+            F.round(F.sum("energy_demand_gwh"), 6),
+        ).collect()
+    )
+
+
+def test_city_names_round_trip_through_landing(spark, tmp_path):
+    """Cities with spaces, accents, ``+``, ``%`` and quotes come back from
+    the landed file names unchanged; the expected gold was computed by
+    the in-memory ingestion this pipeline replaced."""
+    names = ("New York", "São Paulo", "A+B%C", "Coeur d'Alene")
+    run_pipeline(spark, "historical", str(tmp_path), cities=names, today=dt.date(2024, 7, 1))
+    assert _gold_summary(spark, tmp_path) == [
+        ("A+B%C", 180, 11608.2, 9016.2, 1848960.0),
+        ("Coeur d'Alene", 180, 11266.324138, 8674.324138, 1797120.0),
+        ("New York", 180, 10626.331034, 8034.331034, 1732320.0),
+        ("São Paulo", 180, 9985.406897, 7393.406897, 1797120.0),
+    ]
+
+
+def test_rerun_into_same_out_reads_only_its_own_landing(spark, tmp_path):
+    """A second run with other cities on the same dates leaves the first
+    run's bronze files in raw/ but ingests only the files it landed."""
+    today = dt.date(2024, 7, 1)
+    run_pipeline(spark, "historical", str(tmp_path), cities=("Chicago", "Houston"), today=today)
+    report = run_pipeline(
+        spark, "historical", str(tmp_path), cities=("Phoenix", "Seattle"), today=today
+    )
+    assert len(list((tmp_path / "raw").glob("*.json"))) == 8
+    assert report["total_rows"] == 360
+    assert _gold_summary(spark, tmp_path) == [
+        ("Phoenix", 180, 10964.668966, 8372.668966, 1861920.0),
+        ("Seattle", 180, 10303.634483, 7711.634483, 1823040.0),
+    ]
+
+
+def test_csv_header_is_fact_column_order(spark, tmp_path):
+    """The CSV is derived from gold, whose read puts the partition column
+    last; its header must still be the fact's column order."""
+    run_pipeline(spark, "realtime", str(tmp_path), cities=("Phoenix", "Seattle"),
+                 today=dt.date(2024, 7, 1))
+    parts = (tmp_path / "processed" / "weather_energy_csv").glob("part-*.csv")
+    headers = {p.read_text().split("\n", 1)[0] for p in parts if p.stat().st_size}
+    assert headers == {",".join(FACT_SCHEMA.names)}
+    csv = spark.read.option("header", True).csv(str(tmp_path / "processed" / "weather_energy_csv"))
+    assert csv.count() == 2

@@ -3,6 +3,7 @@ injectable HTTP fetchers (no network), CSV/parquet sinks."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
@@ -13,6 +14,7 @@ from us_weather_energy_analysis_pipeline_spark.sources.fetch import (
     fetch_noaa,
     fetch_with_retries,
     land_json,
+    landing_path,
 )
 from us_weather_energy_analysis_pipeline_spark.sources.noaa import read_noaa_landing
 
@@ -42,11 +44,15 @@ class FakeResp:
         return self._p
 
 
+START, END = dt.date(2025, 7, 1), dt.date(2025, 7, 31)
+
+
 def test_noaa_landing_roundtrip(spark, tmp_path):
-    """S4 land → S2 read with pinned schema → exploded EAV rows."""
-    path = str(tmp_path / "weather_nyc.json")
+    """S4 land → S2 read with pinned schema → exploded EAV rows, city
+    from the landed file name."""
+    path = landing_path(str(tmp_path), "weather", "New York", START, END)
     land_json(NOAA_PAYLOAD, path)
-    rows = read_noaa_landing(spark, path, city="New York").collect()
+    rows = read_noaa_landing(spark, path).collect()
     assert len(rows) == 2
     assert {r["datatype"] for r in rows} == {"TMAX", "TMIN"}
     assert all(r["city"] == "New York" for r in rows)
@@ -54,11 +60,12 @@ def test_noaa_landing_roundtrip(spark, tmp_path):
 
 
 def test_eia_landing_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "energy_nyc.json")
+    path = landing_path(str(tmp_path), "energy", "New York", START, END)
     land_json(EIA_PAYLOAD, path)
-    rows = read_eia_landing(spark, path, city="New York").collect()
+    rows = read_eia_landing(spark, path).collect()
     assert len(rows) == 2
     assert rows[0]["value_str"] == "512.3"  # stays string until transform
+    assert all(r["city"] == "New York" for r in rows)
 
 
 def test_fetch_retry_then_success():
@@ -132,31 +139,9 @@ def test_write_fact_roundtrip(spark, tmp_path):
     assert dict(back_csv.dtypes)["date"] == "date"
 
 
-def test_fetch_partitioned_shape():
-    """Executor-side fetch generator: one partition of request specs →
-    payload JSON strings (the mapInPandas wiring for fetching hundreds of
-    stations in parallel)."""
-    import json
-    from collections import namedtuple
-
-    from us_weather_energy_analysis_pipeline_spark.sources.fetch import (
-        fetch_partitioned,
-    )
-
-    Spec = namedtuple("Spec", ["url", "params"])
-    specs = [Spec("http://a", json.dumps({"q": 1})), Spec("http://b", json.dumps({}))]
-
-    def fake(url, params, headers):
-        return FakeResp({"url": url, "params": params})
-
-    out = [json.loads(s) for s in fetch_partitioned(iter(specs), http_get=fake)]
-    assert [o["url"] for o in out] == ["http://a", "http://b"]
-    assert out[0]["params"] == {"q": 1}
-
-
 def test_malformed_landing_payloads(spark, tmp_path):
     """Landing resilience: payloads missing keys / wrong shapes produce
-    empty frames (schema-on-read with explode_outer), never crashes."""
+    empty frames (schema-on-read with explode), never crashes."""
     cases = {
         "empty.json": {},
         "no_results.json": {"unexpected": 1},
@@ -170,12 +155,9 @@ def test_malformed_landing_payloads(spark, tmp_path):
             rows = read_eia_landing(spark, path).collect()
         else:
             rows = read_noaa_landing(spark, path).collect()
-        # explode_outer on a missing array gives either zero rows or one
-        # all-null row — both harmless to every downstream aggregate
-        assert all(
-            r["period_str" if fname.startswith("eia") else "date_str"] is None
-            for r in rows
-        )
+        # explode on a missing array gives zero rows, so the payload's
+        # city never reaches the date spine
+        assert rows == []
 
 
 class TestRecordedCassette:

@@ -165,18 +165,17 @@ def cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: unordered pairs of event types that
     appear for the same user on the same day.
 
-    Bitmask plan (r6, VERDICT task 4 — probe in
-    ``scripts/probe_cooccurrence.py``, A/B in BENCH_AB.md): the old
-    collect_set plan spent its 0.35 s data-time in the ObjectHashAggregate
-    building per-key string sets (probe: sets 0.28 s vs bit_or 0.16 s at
-    sf0.1). With the (tiny, memoized) event-type dictionary, each type
-    becomes one bit; the per-(user, day) set is a ``bit_or`` over longs —
-    a whole-stage-codegen hash agg whose shuffle rows carry ONE long
-    instead of a string array. Distinct masks number ≤ 2^|types|, so
+    Bitmask plan (r6, VERDICT task 4 — stage-split probe and A/B in
+    BENCH_AB.md): the old collect_set plan spent its 0.35 s data-time in
+    the ObjectHashAggregate building per-key string sets (probe: sets
+    0.28 s vs bit_or 0.16 s at sf0.1). With the (tiny, memoized)
+    event-type dictionary, each type becomes one bit; the per-(user, day)
+    set is a ``bit_or`` over longs — a whole-stage-codegen hash agg whose
+    shuffle rows carry ONE long instead of a string array. Distinct masks number ≤ 2^|types|, so
     masks roll up to counts first and the pair HOF expands over that tiny
     relation, weighted by count. Full plan 0.47 s → 0.27 s replicated;
-    same single fact shuffle, identical output (probe asserts set
-    equality). Types beyond 60 (mask width) or an empty dictionary fall
+    same single fact shuffle, identical output (the oracle gate checks
+    it). Types beyond 60 (mask width) or an empty dictionary fall
     back to the collect_set plan."""
     e = load(spark, sf_dir, "events")
     # NULL basket keys never pair: the oracle's self-join condition

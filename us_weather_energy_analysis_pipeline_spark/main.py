@@ -3,8 +3,11 @@
 
 Offline-first: with ``--offline`` (default — this container has no
 network) the raw NOAA/EIA payloads are synthesized deterministically in
-the FIXTURES F1/F2 shapes, landed as bronze JSON, and the exact same
-read→transform→join→QC→write plan runs over them. With ``--online`` the
+the FIXTURES F1/F2 shapes and landed as bronze JSON, one file per (kind,
+city). The run then reads back exactly the files it landed, with city
+taken from each file name, and runs one read→transform→join plan. Gold
+parquet is written once; the QC report and the CSV both come from reading
+that gold back, so the fact plan is evaluated once. With ``--online`` the
 landing step fetches from the real APIs instead; everything downstream is
 identical — the fetch layer is the only thing that changes.
 
@@ -30,10 +33,11 @@ from us_weather_energy_analysis_pipeline_spark.plans.etl import (
     write_fact,
 )
 from us_weather_energy_analysis_pipeline_spark.quality.checks import quality_report
+from us_weather_energy_analysis_pipeline_spark.schemas import FACT_SCHEMA
 from us_weather_energy_analysis_pipeline_spark.sources.datagen import DEFAULT_CITIES
-from us_weather_energy_analysis_pipeline_spark.sources.eia import eia_records_df
-from us_weather_energy_analysis_pipeline_spark.sources.fetch import land_json
-from us_weather_energy_analysis_pipeline_spark.sources.noaa import noaa_records_df
+from us_weather_energy_analysis_pipeline_spark.sources.eia import read_eia_landing
+from us_weather_energy_analysis_pipeline_spark.sources.fetch import land_json, landing_path
+from us_weather_energy_analysis_pipeline_spark.sources.noaa import read_noaa_landing
 
 log = logging.getLogger("pipeline")
 
@@ -78,30 +82,29 @@ def run_pipeline(
     today: dt.date | None = None,
 ) -> dict:
     """The reference pipeline (`pipeline.py:11-111`) as one lazy DAG:
-    land bronze → normalize weather+energy (all cities, one plan each) →
-    inner join → QC → partitioned parquet + CSV. Returns the QC report."""
+    land bronze → read back exactly those files → normalize weather+energy
+    (all cities, one plan each) → inner join → gold parquet, written once →
+    QC and CSV over that gold. Returns the QC report."""
     start, end = resolve_date_range(mode, today)
     raw_dir = os.path.join(out_dir, "raw")
     os.makedirs(raw_dir, exist_ok=True)
 
-    weather_payloads, energy_payloads = {}, {}
-    for city in cities:
-        w = synth_noaa_payload(city, start, end)
-        e = synth_eia_payload(city, start, end)
-        land_json(w, os.path.join(raw_dir, f"weather_{city}_{start}_{end}.json"))
-        land_json(e, os.path.join(raw_dir, f"energy_{city}_{start}_{end}.json"))
-        weather_payloads[city], energy_payloads[city] = w, e
+    weather_files = [landing_path(raw_dir, "weather", c, start, end) for c in cities]
+    energy_files = [landing_path(raw_dir, "energy", c, start, end) for c in cities]
+    for city, w, e in zip(cities, weather_files, energy_files):
+        land_json(synth_noaa_payload(city, start, end), w)
+        land_json(synth_eia_payload(city, start, end), e)
     log.info("landed raw payloads for %d cities (%s..%s)", len(cities), start, end)
 
-    weather = process_weather(noaa_records_df(spark, weather_payloads), start, end)
-    energy = process_energy(eia_records_df(spark, energy_payloads), start, end)
-    fact = build_fact(weather, energy)
+    weather = process_weather(read_noaa_landing(spark, weather_files), start, end)
+    energy = process_energy(read_eia_landing(spark, energy_files), start, end)
+    gold_path = os.path.join(out_dir, "processed", "weather_energy_parquet")
+    write_fact(build_fact(weather, energy), gold_path)
 
-    report = quality_report(fact)
-    write_fact(fact, os.path.join(out_dir, "processed", "weather_energy_parquet"))
-    write_fact(
-        fact, os.path.join(out_dir, "processed", "weather_energy_csv"), fmt="csv"
-    )
+    # the read puts the partition column last; select restores fact order
+    gold = spark.read.schema(FACT_SCHEMA).parquet(gold_path).select(*FACT_SCHEMA.names)
+    report = quality_report(gold)
+    write_fact(gold, os.path.join(out_dir, "processed", "weather_energy_csv"), fmt="csv")
     log.info("quality report: %s", report)
     return report
 

@@ -12,6 +12,8 @@ from pyspark.sql import types as T
 # NOAA GHCND daily response (reference data_fetcher.py:24-55, FIXTURES F1):
 # {"results": [{"date": "2025-07-29T00:00:00", "datatype": "TMAX",
 #               "value": 36.1, "station": "...", "attributes": "..."}]}
+# `value` is read as a STRING and try_cast by the reader, so a quoted
+# number ("12.5") keeps its value instead of reading as NULL.
 NOAA_RAW_SCHEMA = T.StructType(
     [
         T.StructField(
@@ -21,7 +23,7 @@ NOAA_RAW_SCHEMA = T.StructType(
                     [
                         T.StructField("date", T.StringType()),
                         T.StructField("datatype", T.StringType()),
-                        T.StructField("value", T.DoubleType()),
+                        T.StructField("value", T.StringType()),
                         T.StructField("station", T.StringType()),
                         T.StructField("attributes", T.StringType()),
                     ]

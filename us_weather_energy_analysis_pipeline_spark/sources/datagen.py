@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.functions.scalars import row_avg
 from us_weather_energy_analysis_pipeline_spark.operators.spine import date_spine
+from us_weather_energy_analysis_pipeline_spark.schemas import CITIES_SCHEMA
+from us_weather_energy_analysis_pipeline_spark.session import local_df
 
 DEFAULT_CITIES = ("New York", "Chicago", "Houston", "Phoenix", "Seattle")
 # Per-city (base °F, seasonal amplitude) — shaped like debug_helper.py:279-292.
@@ -48,7 +50,7 @@ def generate_weather_energy(
     """
     spine = date_spine(spark, start, end)
     city_rows = [(c, *CITY_CLIMATE.get(c, (55.0, 20.0))) for c in cities]
-    dims = spark.createDataFrame(city_rows, "city string, base double, amp double")
+    dims = local_df(spark, city_rows, "city string, base double, amp double")
     grid = spine.crossJoin(F.broadcast(dims))
 
     doy = F.dayofyear("date")
@@ -88,6 +90,4 @@ def cities_dimension(spark: SparkSession) -> DataFrame:
         ("Phoenix", "AZ", "GHCND:USW00023183", "AZPS", 33.4484, -112.0740),
         ("Seattle", "WA", "GHCND:USW00024233", "SCL", 47.6062, -122.3321),
     ]
-    from us_weather_energy_analysis_pipeline_spark.schemas import CITIES_SCHEMA
-
-    return spark.createDataFrame(rows, CITIES_SCHEMA)
+    return local_df(spark, rows, CITIES_SCHEMA)

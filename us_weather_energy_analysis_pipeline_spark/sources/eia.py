@@ -12,34 +12,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.schemas import EIA_RAW_SCHEMA
+from us_weather_energy_analysis_pipeline_spark.sources.fetch import city_from_landing_path
 
 
-def read_eia_landing(spark: SparkSession, path: str, city: str | None = None) -> DataFrame:
-    """Read landed EIA JSON page(s) → (city?, period_str, value_str)."""
-    raw = spark.read.schema(EIA_RAW_SCHEMA).json(path)
-    return flatten_eia(raw, city)
+def read_eia_landing(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """Read landed EIA JSON page(s) → one row per hourly reading:
+    (period_str, value_str, city), city taken from each file's
+    ``landing_path`` name (reference `data_processor.py:66-76`).
 
-
-def flatten_eia(raw: DataFrame, city: str | None = None) -> DataFrame:
-    """Explode {"response": {"data": [...]}} → one row per hourly reading
-    (reference `data_processor.py:66-76`). ``value`` stays a string here;
-    the numeric coercion (null-on-garbage) happens in the transform so the
-    semantics live in one place."""
-    rows = raw.select(F.explode_outer("response.data").alias("r")).select(
+    ``value`` stays a string here; the numeric coercion (null-on-garbage)
+    happens in the transform so the semantics live in one place.
+    """
+    raw = spark.read.schema(EIA_RAW_SCHEMA).json(paths)
+    rows = raw.select(
+        F.explode("response.data").alias("r"), city_from_landing_path().alias("city")
+    )
+    return rows.select(
         F.col("r.period").alias("period_str"),
         F.col("r.value").alias("value_str"),
+        "city",
     )
-    if city is not None:
-        rows = rows.withColumn("city", F.lit(city))
-    return rows
-
-
-def eia_records_df(spark: SparkSession, payloads: dict[str, dict]) -> DataFrame:
-    """Build the hourly DataFrame from in-memory {city: payload} dicts
-    (FIXTURES F2 shape) — the test/fixture path."""
-    rows = []
-    for city, payload in payloads.items():
-        for rec in (payload.get("response") or {}).get("data", []) or []:
-            v = rec.get("value")
-            rows.append((rec.get("period"), None if v is None else str(v), city))
-    return spark.createDataFrame(rows, "period_str string, value_str string, city string")

@@ -6,17 +6,22 @@ the reference's 334 s runtime, BASELINE.md). The fetch layer is kept thin
 and injectable: ``http_get`` is a callable so tests (and air-gapped runs)
 inject a fake; the real one uses ``requests`` behind an import-try.
 
-At real scale, fetching hundreds of stations/regions moves from the driver
-to executors: build a DataFrame of request specs and fetch inside
-``mapInPandas`` per partition — ``fetch_partitioned`` shows that shape.
+Fetched payloads land verbatim as bronze JSON, one file per (kind, city,
+range); ``landing_path`` names that file and ``city_from_landing_path``
+reads the city back out of it, so the readers need no side channel.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import os
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Any
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 HttpGet = Callable[[str, dict, dict], Any]  # (url, params, headers) -> response-like
 
@@ -125,18 +130,24 @@ def fetch_eia_pages(
     return pages
 
 
+def landing_path(
+    raw_dir: str, kind: str, city: str, start: dt.date, end: dt.date
+) -> str:
+    """Bronze file of one (kind, city, range): ``{kind}_{city}_{start}_{end}.json``."""
+    return os.path.join(raw_dir, f"{kind}_{city}_{start}_{end}.json")
+
+
+def city_from_landing_path() -> Column:
+    """The city of each row, recovered from its ``landing_path`` file name.
+    ``_metadata.file_name`` is URI-encoded except that ``+`` stays literal,
+    so ``+`` is escaped before decoding. Kind and dates hold no ``_``; the
+    city may."""
+    name = F.url_decode(F.replace(F.col("_metadata.file_name"), F.lit("+"), F.lit("%2B")))
+    return F.regexp_extract(name, r"^[^_]*_(.*)_[^_]*_[^_]*\.json$", 1)
+
+
 def land_json(payload: dict, path: str) -> None:
     """Bronze-zone sink: persist the raw payload verbatim (reference S4
     `data_fetcher.py:50-53`)."""
     with open(path, "w") as f:
         json.dump(payload, f)
-
-
-def fetch_partitioned(spec_rows: Iterator, http_get: HttpGet = _default_http_get):
-    """Executor-side fetch shape for scale: one partition of request specs →
-    JSON payload strings. Use as
-    ``specs_df.mapInPandas(lambda it: ..., schema)`` wiring; kept minimal
-    here since the container has no network."""
-    for row in spec_rows:
-        payload = fetch_with_retries(row.url, json.loads(row.params), {}, http_get=http_get)
-        yield json.dumps(payload)

@@ -13,45 +13,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.schemas import NOAA_RAW_SCHEMA
+from us_weather_energy_analysis_pipeline_spark.sources.fetch import city_from_landing_path
 
 
-def read_noaa_landing(spark: SparkSession, path: str, city: str | None = None) -> DataFrame:
-    """Read landed NOAA JSON file(s) → long-form (city?, date_str, datatype,
-    value_c). ``city`` tags single-city payloads; multi-city landings should
-    instead encode city in the path and use ``read_noaa_landing_partitioned``.
+def read_noaa_landing(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """Read landed NOAA JSON file(s) → one row per (date, datatype)
+    observation: (date_str, datatype, value_c, city), city taken from each
+    file's ``landing_path`` name (reference `data_processor.py:30-42`).
+
+    Station/attributes are dropped, as the reference drops them. An empty
+    payload yields no rows, so its city never reaches the date spine.
+    ``value`` is read as text and ``try_cast``: quoted numbers keep their
+    value, garbage becomes NULL.
     """
-    raw = spark.read.schema(NOAA_RAW_SCHEMA).json(path)
-    return flatten_noaa(raw, city)
-
-
-def flatten_noaa(raw: DataFrame, city: str | None = None) -> DataFrame:
-    """Explode {"results": [...]} → one row per (date, datatype) observation
-    (reference `data_processor.py:30-42`). Station/attributes are dropped,
-    as the reference drops them."""
-    rows = raw.select(F.explode_outer("results").alias("r")).select(
+    raw = spark.read.schema(NOAA_RAW_SCHEMA).json(paths)
+    rows = raw.select(
+        F.explode("results").alias("r"), city_from_landing_path().alias("city")
+    )
+    return rows.select(
         F.col("r.date").alias("date_str"),
         F.col("r.datatype").alias("datatype"),
-        F.col("r.value").alias("value_c"),
-    )
-    if city is not None:
-        rows = rows.withColumn("city", F.lit(city))
-    return rows
-
-
-def noaa_records_df(spark: SparkSession, payloads: dict[str, dict]) -> DataFrame:
-    """Build the long-form DataFrame from in-memory {city: payload} dicts —
-    the test/fixture path (FIXTURES F1), same shape as read_noaa_landing."""
-    rows = []
-    for city, payload in payloads.items():
-        for rec in payload.get("results", []) or []:
-            rows.append(
-                (
-                    rec.get("date"),
-                    rec.get("datatype"),
-                    float(rec["value"]) if rec.get("value") is not None else None,
-                    city,
-                )
-            )
-    return spark.createDataFrame(
-        rows, "date_str string, datatype string, value_c double, city string"
+        F.expr("try_cast(r.value as double)").alias("value_c"),
+        "city",
     )
