@@ -38,6 +38,12 @@ def test_entry_smoke(spark):
     assert len(df.columns) > 0
 
 
+def test_registry_complete_149():
+    from us_weather_energy_analysis_pipeline_spark.corpus import registry
+
+    assert len(registry.queries()) >= 149
+
+
 def test_every_query_has_docstring_and_tags():
     for name, q in REGISTRY.items():
         assert q.doc.strip(), f"{name} missing docstring"

@@ -578,12 +578,15 @@ def _bloom_probe(p: str) -> str:
     tags=("text", "decontamination", "ngram", "bloom", "semi-join"),
 )
 def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination for the regime where the EVAL gram set is itself
-    too large to broadcast-join (VERDICT r11 missing-item 1): a Bloom
-    filter built from SQL primitives prunes the training gram stream
-    BEFORE the exact shuffle join that removes its false positives.
-    Output is identical to ``decontaminate_ngram_overlap`` (same oracle)
-    — the Bloom side is a pure pre-filter.
+    """Decontamination through a Bloom pre-filter: a Bloom mask built
+    from SQL primitives over the eval grams keeps the full training gram
+    stream out of the exact join — only grams that pass the mask reach
+    it, and the exact join removes the mask's false positives. Output is
+    identical to ``decontaminate_ngram_overlap`` (same oracle) — the
+    Bloom side is a pure pre-filter. The operator was first motivated
+    (r11) by eval gram sets too large to broadcast; r15 retired that
+    framing, because both sides are broadcast now: the mask as one
+    scalar array and the distinct eval gram set in the exact join.
 
     Construction (no native ``bloom_filter_agg`` — Spark 4.1 registers
     that expression only inside runtime-filter injection, not in the

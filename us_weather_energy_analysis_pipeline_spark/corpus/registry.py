@@ -108,93 +108,9 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# Driver-window layout contract
-# -----------------------------
-# The external driver verifies the FIRST ~50 registration positions each
-# round, so registration order is load-bearing. Historically it was the
-# module import order below; since round 6 the window is DECLARED here:
-# after all modules register, ``_ensure_loaded`` rebuilds ``REGISTRY`` so
-# ``WINDOW`` occupies positions 0..len(WINDOW)-1 verbatim and every other
-# query keeps its original relative (import) order after it. A name in
-# ``WINDOW`` that no module registered raises at load time — a typo can't
-# silently shift the window. ``tests/test_registry_layout.py`` asserts the
-# exact positions of the rotated queries.
-#
-# Round-15 window (VERDICT r14 task 3): positions 0-7 are the queries
-# whose PLANS changed in r15 (batch-1 verify-stage/broadcast/gram-hash
-# rewrites in cleanse_q + pipeline_q, the r15 pair-bound pre-filter in
-# the ngram/winnow family, and the ADVICE r14 lag_diff_pct window-key
-# rename) — every one locally oracle-verified at 3 SFs, owed a fresh
-# driver row; positions 8-15 are the r14-touched paths whose driver row
-# predates their change (dedup_simhash_pairs / dedup_minhash_lsh from
-# the r14 shared-subtree batch, plus the batch-5 native-date-key
-# rollups); positions 16-49 are 34 of the 43 remaining queries whose
-# latest driver row is r12 (the staleness frontier per the
-# CORRECTNESS_r01-r14 union recomputed this round: histogram
-# {r12: 49, r13: 50, r14: 50}). The 9 left for r16 are the untouched
-# plain-SQL TPC-H variants (tpch_q3/q4/q13/q14/q17/q19/q22,
-# argmax_supplier, dates_intersect) — stable single-statement queries
-# unchanged since registration.
-WINDOW: tuple[str, ...] = (
-    # -- r15 plan-changed, locally re-verified --
-    "decontaminate_bloom_prefilter",
-    "dedup_pipeline_e2e",
-    "decontamination_check",
-    "decontaminate_ngram_overlap",
-    "dedup_ngram_jaccard",
-    "dedup_winnow_pairs",
-    "dedup_cluster_assign",
-    "lag_diff_pct",
-    # -- r14-touched, driver row predates the change --
-    "dedup_simhash_pairs",
-    "dedup_minhash_lsh",
-    "dedup_keep_first",
-    "moving_avg_7d",
-    "pivot_eav",
-    "resample_hourly_daily",
-    "cohort_retention",
-    "funnel_conversion",
-    # -- last driver row r12 (34 of the 43-query stale cohort) --
-    "bigram_topk",
-    "corpus_temperature_resample",
-    "dedup_embed_cosine",
-    "doc_chunk_overlap",
-    "embed_centroid_by_label",
-    "embed_corr_pairs_topk",
-    "embed_cosine_topk",
-    "embed_dim_stats",
-    "embed_hard_negative_mine",
-    "embed_int8_quantize",
-    "embed_ivf_multiprobe_topk",
-    "embed_ivf_topk",
-    "embed_lsh_bucket_topk",
-    "embed_lsh_multiprobe_topk",
-    "embed_nearest_centroid_assign",
-    "json_props_rollup",
-    "map_view_decorated",
-    "moments_skew_kurt",
-    "pii_redact_scrub",
-    "quantile_sketch_sample",
-    "range_join_price_band",
-    "rfm_segments",
-    "text_fingerprint",
-    "text_heaps_fit",
-    "text_lang_id",
-    "text_token_count",
-    "text_unigram_logprob",
-    "text_zipf_fit",
-    "topk_per_group",
-    "trailing_range_7d",
-    "url_domain_throttle",
-    "vocab_prune_df_bounds",
-    "weighted_sample_aexpj",
-    "yoy_monthly",
-)
-
 
 def _ensure_loaded() -> None:
-    """Import all corpus modules (each registers its queries on import),
-    then reorder ``REGISTRY`` per the ``WINDOW`` layout contract above."""
+    """Import all corpus modules; each registers its queries on import."""
     global _LOADED
     if _LOADED:
         return
@@ -222,13 +138,6 @@ def _ensure_loaded() -> None:
         cleanse_q,
     )
 
-    missing = [n for n in WINDOW if n not in REGISTRY]
-    if missing:
-        raise KeyError(f"WINDOW names never registered: {missing}")
-    ordered = {n: REGISTRY[n] for n in WINDOW}
-    ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
     _LOADED = True
 
 

@@ -9,7 +9,9 @@ but an operator cannot know when the CALLER's action is done, so eager
 unpersist inside the operator would just force a recompute.
 
 The contract: operators register their persisted handles via
-:func:`track`; loop drivers (bench.py, scripts/verify_local.py, test
+:func:`track`; loop drivers (the corpus sweep ``bench.py``, the
+``perfbench`` corpus workload, ``scripts/verify_local.py``,
+``scripts/scale_probe.py``, ``scripts/dump_plans.py`` and the test
 fixtures) call :func:`release_all` between queries. A long-lived
 application that never calls it degrades gracefully to Spark's LRU block
 eviction — the same behavior as before tracking existed.
