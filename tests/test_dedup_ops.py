@@ -5,9 +5,8 @@ from __future__ import annotations
 import pytest
 
 from us_weather_energy_analysis_pipeline_spark.operators.dedup import (
-    lsh_candidate_pairs,
     minhash_near_dups,
-    minhash_signatures,
+    minhash_sig_ctes,
     simhash32,
     simhash_near_dups,
     word_shingles,
@@ -41,11 +40,11 @@ def test_near_dup_scores_between(docs):
     assert not any(4 in pair for pair in out)
 
 
-def test_signature_shape(docs):
-    sig = minhash_signatures(word_shingles(docs)).collect()
-    assert all(len(r["sig"]) == 12 for r in sig)
-    cands = lsh_candidate_pairs(minhash_signatures(word_shingles(docs)))
-    assert cands.filter("doc_a >= doc_b").count() == 0
+def test_signature_shape(docs, spark):
+    sig = spark.sql(f"WITH {minhash_sig_ctes()} SELECT sig FROM sig", docs=docs).collect()
+    assert sig and all(len(r["sig"]) == 12 for r in sig)
+    pairs = minhash_near_dups(docs, threshold=0.0).collect()
+    assert pairs and all(r["doc_a"] < r["doc_b"] for r in pairs)
 
 
 def test_minhash_xxhash64_variant_equivalent_candidates(docs, spark, sf_dir):

@@ -114,55 +114,73 @@ def test_upsert_parquet_roundtrip(spark, tmp_path):
         upsert_parquet,
     )
 
-    path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], "id long, k string, v double"
     )
-    assert upsert_parquet(spark, path, base, ["id"]) == 3
     update = spark.createDataFrame(
         [(2, "b", 20.0), (4, "d", 4.0)], "id long, k string, v double"
     )
-    assert upsert_parquet(spark, path, update, ["id"]) == 4
-    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: 1.0, 2: 20.0, 3: 3.0, 4: 4.0}
-    # idempotent re-apply
-    assert upsert_parquet(spark, path, update, ["id"]) == 4
+    # a trailing slash must name the same table, not nest staging inside it
+    for path in (str(tmp_path / "tbl"), str(tmp_path / "tbl_slash") + "/"):
+        assert upsert_parquet(spark, path, base, ["id"]) == 3
+        assert upsert_parquet(spark, path, update, ["id"]) == 4
+        got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+        assert got == {1: 1.0, 2: 20.0, 3: 3.0, 4: 4.0}
+        # idempotent re-apply
+        assert upsert_parquet(spark, path, update, ["id"]) == 4
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["tbl", "tbl_slash"]
 
 
-def test_upsert_table_dispatch_falls_back_to_parquet(spark, tmp_path):
-    """Without delta-spark in the session, upsert_table must take the
-    parquet write-then-swap path and honor the same contract."""
-    from us_weather_energy_analysis_pipeline_spark.operators import upsert
+def _failing(df, col):
+    """``df`` with ``col`` raising on the rows that hold its minimum: the
+    task reading them fails, so the write job fails after other tasks may
+    have committed their files."""
+    from pyspark.sql import functions as F
 
-    assert upsert.delta_available(spark) is False  # this container has no delta
-    path = str(tmp_path / "tbl2")
-    base = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double")
-    assert upsert.upsert_table(spark, path, base, ["id"]) == 2
-    upd = spark.createDataFrame([(2, 20.0), (3, 3.0)], "id long, v double")
-    assert upsert.upsert_table(spark, path, upd, ["id"]) == 3
-    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: 1.0, 2: 20.0, 3: 3.0}
-
-
-def test_upsert_delta_merge(spark, tmp_path):
-    """Delta MERGE path — exercised only where delta-spark is installed
-    (skipped in this container; the dispatch test above covers the
-    fallback)."""
-    pytest.importorskip("delta")
-    from us_weather_energy_analysis_pipeline_spark.operators.upsert import (
-        delta_available,
-        upsert_delta,
+    first = df.agg(F.min(col)).first()[0]
+    return df.withColumn(
+        col, F.when(F.col(col) == first, F.raise_error(F.lit("injected"))).otherwise(F.col(col))
     )
 
-    if not delta_available(spark):
-        pytest.skip("session lacks DeltaSparkSessionExtension")
-    path = str(tmp_path / "dtbl")
-    base = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double")
-    assert upsert_delta(spark, path, base, ["id"]) == 2
-    upd = spark.createDataFrame([(2, 20.0), (3, 3.0)], "id long, v double")
-    assert upsert_delta(spark, path, upd, ["id"]) == 3
-    got = {r["id"]: r["v"] for r in spark.read.format("delta").load(path).collect()}
-    assert got == {1: 1.0, 2: 20.0, 3: 3.0}
+
+def test_write_fact_fault_keeps_previous_gold(spark, tmp_path):
+    """A write_fact whose job fails mid-write leaves the previous gold
+    readable and row-identical, and no staging sibling behind — for the
+    partitioned parquet gold and for the CSV."""
+    from us_weather_energy_analysis_pipeline_spark.plans.etl import write_fact
+    from us_weather_energy_analysis_pipeline_spark.sources.datagen import (
+        generate_weather_energy,
+    )
+
+    fact = generate_weather_energy(spark, "2024-01-01", "2024-01-05")
+    for fmt, read in (
+        ("parquet", spark.read.parquet),
+        ("csv", spark.read.option("header", True).csv),
+    ):
+        path = str(tmp_path / fmt)
+        write_fact(fact, path, fmt=fmt)
+        before = read(path).orderBy("date", "city").collect()
+        assert before
+        with pytest.raises(Exception, match="injected"):
+            write_fact(_failing(fact, "date"), path, fmt=fmt)
+        assert read(path).orderBy("date", "city").collect() == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["csv", "parquet"]
+
+
+def test_upsert_parquet_fault_keeps_table(spark, tmp_path):
+    """A failed upsert leaves the table as it was and no staging behind."""
+    from us_weather_energy_analysis_pipeline_spark.operators.upsert import (
+        upsert_parquet,
+    )
+
+    path = str(tmp_path / "tbl")
+    base = spark.range(10).selectExpr("id", "id * 1.5 AS v").repartition(2)
+    assert upsert_parquet(spark, path, base, ["id"]) == 10
+    update = spark.range(5, 15).selectExpr("id", "id * 2.0 AS v").repartition(2)
+    with pytest.raises(Exception, match="injected"):
+        upsert_parquet(spark, path, _failing(update, "v"), ["id"])
+    assert sorted(spark.read.parquet(path).collect()) == sorted(base.collect())
+    assert [p.name for p in tmp_path.iterdir()] == ["tbl"]
 
 
 def test_partition_pruning_on_city(spark, tmp_path):
@@ -205,22 +223,24 @@ def test_compact_parquet(spark, tmp_path):
         compact_parquet,
     )
 
-    path = str(tmp_path / "frag")
     base = spark.createDataFrame(
         [(i, float(i)) for i in range(100)], "id long, v double"
     )
-    # fragment: 10 appends of 1 file each
-    for i in range(10):
-        base.filter(f"id >= {i*10} and id < {(i+1)*10}").repartition(1).write.mode(
-            "append"
-        ).parquet(path)
-    n_before = len(glob.glob(f"{path}/*.parquet"))
-    assert n_before >= 10
-    n = compact_parquet(spark, path, target_files=1, sort_within_by=("id",))
-    assert n == 100
-    assert len(glob.glob(f"{path}/*.parquet")) == 1
-    got = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    assert got == list(range(100))
+    # a trailing slash must name the same table, not nest staging inside it
+    for path in (str(tmp_path / "frag"), str(tmp_path / "frag_slash") + "/"):
+        # fragment: 10 appends of 1 file each
+        for i in range(10):
+            base.filter(f"id >= {i*10} and id < {(i+1)*10}").repartition(1).write.mode(
+                "append"
+            ).parquet(path)
+        n_before = len(glob.glob(f"{path}/*.parquet"))
+        assert n_before >= 10
+        n = compact_parquet(spark, path, target_files=1, sort_within_by=("id",))
+        assert n == 100
+        assert len(glob.glob(f"{path}/*.parquet")) == 1
+        got = sorted(r["id"] for r in spark.read.parquet(path).collect())
+        assert got == list(range(100))
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["frag", "frag_slash"]
 
 
 def test_range_join_is_hash_not_nested_loop(spark, sf_dir):

@@ -8,6 +8,6 @@
 - ``similarity`` vector search: brute-force, IVF, hyperplane-LSH
 - ``asof``       backward as-of join (union-and-carry window)
 - ``skew``       two-phase salted aggregation
-- ``upsert``     write-then-swap parquet MERGE
+- ``upsert``     staging → swap table replace; key-based parquet upsert
 - ``multimodal`` binary columns + Arrow-batched decode plumbing
 """

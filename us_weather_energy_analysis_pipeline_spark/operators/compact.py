@@ -3,10 +3,9 @@ every long-lived incremental table needs (each realtime upsert/append adds
 files; scan cost grows with file count, not data size, and un-clustered
 files defeat parquet min/max row-group skipping on range predicates).
 
-Write-then-swap like operators/upsert.py: rewrite into staging, fully
-materialize, then atomically replace. With a table format (Delta/Iceberg)
-this becomes OPTIMIZE / rewrite_data_files / ZORDER; the call-site
-contract stays the same.
+The rewritten version replaces the table through
+``operators/upsert.replace_table`` (staging → swap), so a failed
+compaction leaves the table as it was.
 
 Scale shape (100 TB): ``cluster_by`` uses ``repartitionByRange`` — one
 range exchange (sampled boundaries) so every output FILE owns a disjoint
@@ -20,10 +19,10 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
+
+from us_weather_energy_analysis_pipeline_spark.operators.upsert import replace_table
 
 
 def compact_parquet(
@@ -85,15 +84,8 @@ def compact_parquet(
         out = df.repartition(target_files)
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-    staging = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    w = out.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    n = spark.read.parquet(staging).count()
-    shutil.rmtree(path)
-    os.rename(staging, path)
-    return n
+    replace_table(out, path, partition_by=partition_by)
+    return spark.read.parquet(path).count()
 
 
 def file_column_ranges(path: str, column: str) -> list[tuple[object, object]]:

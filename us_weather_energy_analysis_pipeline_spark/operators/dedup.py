@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.functions.text import ascii_lower
@@ -43,11 +43,6 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
         )
         for s in range(k)
     ]
-
-
-MINHASH_AB = minhash_params(MINHASH_K)
-
-HEX = "0123456789abcdef"
 
 
 def word_shingles(
@@ -83,93 +78,6 @@ def _shingle_hash_expr(hash_fn: str) -> str:
     if hash_fn == "xxhash64":
         return "xxhash64(shingle) & 4294967295"
     raise ValueError(f"unknown shingle hash family: {hash_fn!r}")
-
-
-def minhash_signatures(
-    shingles: DataFrame, k: int = MINHASH_K, hash_fn: str = "md5"
-) -> DataFrame:
-    """Per-doc MinHash signature via a universal-hash family:
-    sig[s] = min over shingles of (a_s·h + b_s) mod p, where h is a
-    32-bit hash of the shingle (md5 prefix by default — the oracle
-    contract; ``hash_fn='xxhash64'`` for the production path, see
-    ``_shingle_hash_expr``).
-
-    ONE shuffle, no row multiplication, ONE hash per shingle: the k
-    permutations are integer arithmetic on the same parsed hash, and a
-    single groupBy(doc_id) takes the k elementwise mins (partial
-    aggregation combines map-side before the exchange). Duplicate
-    shingles need no pre-distinct — min() is duplicate-insensitive.
-    Returns (doc_id, sig array<bigint> ordered by seed); with md5 the
-    oracle regenerates identical values from the same constants.
-    """
-    # expressions are built as SQL strings (one JVM parse per select):
-    # the per-permutation Column-object arithmetic was ~1000 Py4J
-    # roundtrips per plan build — ~0.5 s of driver time per query call
-    per_row = shingles.selectExpr(
-        "doc_id",
-        f"{_shingle_hash_expr(hash_fn)} AS hv",
-    ).selectExpr(
-        "doc_id",
-        *[
-            f"(hv * {a}L + {b}L) % {MINHASH_P}L AS h{s}"
-            for s, (a, b) in enumerate(minhash_params(k))
-        ],
-    )
-    return (
-        per_row.groupBy("doc_id")
-        .agg(*[F.expr(f"min(h{s}) AS m{s}") for s in range(k)])
-        .selectExpr(
-            "doc_id",
-            "array(" + ", ".join(f"m{s}" for s in range(k)) + ") AS sig",
-        )
-    )
-
-
-def banded_digests(
-    sig: DataFrame, bands: int, k: int, carry_sig: bool = False
-) -> DataFrame:
-    """Explode each signature into (band, digest) rows — the LSH bucketing
-    key. The digest is XXHASH64 over the band's signature values: an
-    8-byte join key instead of the r3 32-char md5 hex string, so the one
-    pair-producing exchange ships fixed-width ints. The DuckDB oracle
-    keeps md5-string digests: both bucketings group by the same value
-    tuple, so candidate sets agree unless xxhash64 collides (~n²/2⁶⁵).
-    ``carry_sig=True`` keeps the signature array on the banded rows (for
-    pipelines that estimate Jaccard right after the bucket join)."""
-    rows = k // bands
-    digests = ", ".join(
-        "xxhash64("
-        + ", ".join(f"sig[{b * rows + r}]" for r in range(rows))
-        + ")"
-        for b in range(bands)
-    )
-    cols = ["doc_id"] + (["sig"] if carry_sig else [])
-    return sig.selectExpr(
-        *cols, f"posexplode(array({digests})) AS (band, digest)"
-    )
-
-
-def lsh_candidate_pairs(
-    sig: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs sharing ≥1 band digest.
-
-    The ONLY join is on (band, digest) — the O(n²) pair space never forms.
-    Returns (doc_a, doc_b, n_shared_bands).
-    """
-    banded = banded_digests(sig, bands, k)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.digest") == F.col("b.digest"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-
 
 
 def minhash_sig_ctes(
@@ -345,7 +253,7 @@ def simhash_fingerprint(
     simhash_map): HOF lambdas evaluate interpreted, outside codegen —
     the tiny post-combine shuffle is the cheaper currency.
     """
-    # SQL-string expression building (see minhash_signatures): the
+    # SQL-string expression building (as in minhash_sig_ctes): the
     # per-bit Column arithmetic was the single biggest Py4J plan-build
     # cost in the corpus (~1.2 s per call).
     #

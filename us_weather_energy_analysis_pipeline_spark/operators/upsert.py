@@ -1,17 +1,13 @@
-"""Key-based upsert into a table — the reference's realtime mode
-(yesterday-only append, `pipeline.py:24-28`) done safely.
+"""Table replacement by staging → swap, and the key-based upsert built on
+it — the reference's realtime mode (yesterday-only append,
+`pipeline.py:24-28`) done safely.
 
-Two paths behind one contract (:func:`upsert_table`):
-
-- **Delta MERGE INTO** when the ``delta-spark`` package is importable
-  and the Spark session carries the Delta extensions — transactional,
-  file-level pruning on the merge keys, the real cluster path;
-- **parquet write-then-swap** otherwise: materialize
-  (existing ∖ new-keys) ∪ new into a staging dir, then atomically swap.
-  The staging write fully completes BEFORE the old directory is
-  touched, so a failed job never corrupts the table — but the swap is
-  local-filesystem-only (rename is not atomic on object stores); at
-  scale use the Delta path.
+:func:`replace_table` is the one way a table directory gets replaced
+(gold writes, upserts, compaction): the new version is written in full to
+a sibling staging directory BEFORE the old one is touched, so a failed
+job leaves the previous version intact and no staging behind. The swap
+is two renames (old aside, staging in), so it is local-filesystem-only:
+rename is not atomic on object stores.
 """
 
 from __future__ import annotations
@@ -23,73 +19,36 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def delta_available(spark: SparkSession) -> bool:
-    """True when the delta-spark package AND its Spark session
-    extensions are present (both are required for MERGE to parse)."""
+def replace_table(
+    df: DataFrame,
+    path: str,
+    fmt: str = "parquet",
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Replace the table directory at ``path`` with ``df`` written as
+    ``fmt`` (CSV with a header row). Writes a sibling staging directory;
+    on success renames the old version aside, renames staging in and
+    deletes the old version; on failure deletes staging and re-raises.
+    Runs only the write's own Spark jobs."""
+    # normalised first: with a trailing slash the "sibling" would land
+    # inside the table and be deleted along with it
+    path = os.path.normpath(path)
+    tag = uuid.uuid4().hex[:8]
+    staging, old = f"{path}__staging_{tag}", f"{path}__old_{tag}"
+    w = df.write.format(fmt)
+    if fmt == "csv":
+        w = w.option("header", True)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
     try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    return "DeltaSparkSessionExtension" in ext
-
-
-def upsert_delta(
-    spark: SparkSession,
-    path: str,
-    new_df: DataFrame,
-    keys: list[str],
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """MERGE ``new_df`` into the Delta table at ``path`` by ``keys``
-    (update-all on match, insert-all otherwise). Creates the table on
-    first write. Returns the resulting row count.
-
-    Scale posture: Delta prunes candidate files by merge-key min/max
-    stats, so the rewrite touches only files containing matched keys —
-    unlike the parquet fallback, which rewrites the whole table.
-    """
-    from delta.tables import DeltaTable
-
-    if not DeltaTable.isDeltaTable(spark, path):
-        # A non-Delta directory here means the table was built by the
-        # parquet fallback; overwrite-create would silently drop those
-        # rows instead of merging them. Refuse — one table path must stay
-        # on one format (migrate explicitly via CONVERT TO DELTA).
-        if os.path.exists(path) and os.listdir(path):
-            raise ValueError(
-                f"{path} exists with non-Delta data; refusing overwrite-create. "
-                "Migrate it (e.g. CONVERT TO DELTA) before Delta upserts."
-            )
-        w = new_df.write.format("delta").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(path)
-    else:
-        tgt = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            tgt.alias("t")
-            .merge(new_df.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-    return spark.read.format("delta").load(path).count()
-
-
-def upsert_table(
-    spark: SparkSession,
-    path: str,
-    new_df: DataFrame,
-    keys: list[str],
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """Upsert dispatch: Delta MERGE when available, parquet
-    write-then-swap fallback. Same contract either way."""
-    if delta_available(spark):
-        return upsert_delta(spark, path, new_df, keys, partition_by)
-    return upsert_parquet(spark, path, new_df, keys, partition_by)
+        w.save(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def upsert_parquet(
@@ -101,25 +60,13 @@ def upsert_parquet(
 ) -> int:
     """Upsert ``new_df`` into the parquet table at ``path`` by ``keys``:
     existing rows with a key present in ``new_df`` are replaced, all other
-    rows kept. Returns the resulting row count.
-
-    The staging write fully materializes BEFORE the old directory is
-    touched, so a failed job never corrupts the table (write-then-swap,
-    the poor man's snapshot isolation).
-    """
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
+    rows kept. Returns the resulting row count. The merged version goes
+    through :func:`replace_table`."""
     if os.path.exists(path):
         existing = spark.read.parquet(path)
         keep = existing.join(new_df.select(*keys).distinct(), keys, "left_anti")
         merged = keep.unionByName(new_df)
     else:
         merged = new_df
-    w = merged.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    n = spark.read.parquet(staging).count()
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
-    return n
+    replace_table(merged, path, partition_by=partition_by)
+    return spark.read.parquet(path).count()

@@ -33,6 +33,7 @@ from us_weather_energy_analysis_pipeline_spark.operators.resample import (
 from us_weather_energy_analysis_pipeline_spark.operators.spine import (
     complete_date_range,
 )
+from us_weather_energy_analysis_pipeline_spark.operators.upsert import replace_table
 
 
 def resolve_date_range(
@@ -140,13 +141,9 @@ def write_fact(
     city as primary (partition pruning for the dashboard's city filters),
     rows sorted by date within each partition so parquet min/max stats
     prune row groups on date-range filters; CSV-with-header kept for
-    reference compatibility."""
+    reference compatibility. Staging → swap (``replace_table``): a failed
+    write leaves the previous gold readable."""
     if fmt == "csv":
-        df.write.mode("overwrite").option("header", True).csv(path)
+        replace_table(df, path, fmt="csv")
     else:
-        (
-            df.sortWithinPartitions("date")
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
+        replace_table(df.sortWithinPartitions("date"), path, partition_by=partition_by)

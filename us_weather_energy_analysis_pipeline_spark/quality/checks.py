@@ -33,6 +33,17 @@ def _outlier_pred(tmax: float, tmin: float):
     )
 
 
+def _flags(config: dict | None, cols: list[str]):
+    """The three row checks, built once for every consumer: (any-null
+    measure over ``cols`` (F5), temp outlier (F3), negative energy (F4)),
+    each null-safe → false."""
+    any_null = F.lit(False)
+    for c in cols:
+        any_null = any_null | F.col(c).isNull()
+    negative = F.coalesce(F.col("energy_demand_gwh") < 0, F.lit(False))
+    return any_null, _outlier_pred(*_thresholds(config)), negative
+
+
 def quality_report(
     df: DataFrame,
     config: dict | None = None,
@@ -45,15 +56,13 @@ def quality_report(
     Returns a plain dict (one collected row) — the report is driver-side
     by nature; the scan is fully distributed.
     """
-    tmax, tmin = _thresholds(config)
     cols = [c for c in MEASURES if c in df.columns]
+    _, outlier, negative = _flags(config, cols)
     aggs = [
         F.count(F.lit(1)).alias("total_rows"),
         *[F.sum(F.col(c).isNull().cast("long")).alias(f"missing__{c}") for c in cols],
-        F.sum(_outlier_pred(tmax, tmin).cast("long")).alias("temp_outliers_count"),
-        F.sum(F.coalesce(F.col("energy_demand_gwh") < 0, F.lit(False)).cast("long")).alias(
-            "negative_energy_count"
-        ),
+        F.sum(outlier.cast("long")).alias("temp_outliers_count"),
+        F.sum(negative.cast("long")).alias("negative_energy_count"),
         F.max("date").alias("latest_date"),
     ]
     row = df.agg(*aggs).collect()[0].asDict()
@@ -76,31 +85,18 @@ def problem_rows(df: DataFrame, config: dict | None = None, limit: int = 50) -> 
     """Rows failing any check: any-null measure (F5) OR temp outlier (F3)
     OR negative energy (F4), deterministic order, head(limit) (reference
     `app.py:552-559`)."""
-    tmax, tmin = _thresholds(config)
-    cols = [c for c in MEASURES if c in df.columns]
-    any_null = F.lit(False)
-    for c in cols:
-        any_null = any_null | F.col(c).isNull()
-    pred = any_null | _outlier_pred(tmax, tmin) | F.coalesce(
-        F.col("energy_demand_gwh") < 0, F.lit(False)
-    )
-    return df.filter(pred).orderBy("date", "city").limit(limit)
+    any_null, outlier, negative = _flags(config, [c for c in MEASURES if c in df.columns])
+    return df.filter(any_null | outlier | negative).orderBy("date", "city").limit(limit)
 
 
 def quality_timeseries(df: DataFrame, config: dict | None = None) -> DataFrame:
     """Per-day rollup of missing/outlier/negative flags (reference A7
     `compute_quality_timeseries` app.py:453-468)."""
-    tmax, tmin = _thresholds(config)
-    cols = [c for c in MEASURES if c in df.columns]
-    any_null = F.lit(False)
-    for c in cols:
-        any_null = any_null | F.col(c).isNull()
+    any_null, outlier, negative = _flags(config, [c for c in MEASURES if c in df.columns])
     return df.groupBy("date").agg(
         F.sum(any_null.cast("long")).alias("missing_count"),
-        F.sum(_outlier_pred(tmax, tmin).cast("long")).alias("outlier_count"),
-        F.sum(F.coalesce(F.col("energy_demand_gwh") < 0, F.lit(False)).cast("long")).alias(
-            "negative_count"
-        ),
+        F.sum(outlier.cast("long")).alias("outlier_count"),
+        F.sum(negative.cast("long")).alias("negative_count"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 

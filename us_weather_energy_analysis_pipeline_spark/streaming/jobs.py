@@ -154,12 +154,9 @@ def foreach_batch_upsert(
     foreachBatch + checkpointing gives effectively-once writes — a replayed
     batch re-merges the same keys idempotently. Returns the started query.
 
-    LOCAL-FILESYSTEM ONLY: upsert_parquet swaps the target with
-    driver-local rename (operators/upsert.py), which is neither atomic for
-    concurrent readers nor valid on HDFS/S3 object stores. On a cluster,
-    point foreachBatch at a transactional table format instead (Delta /
-    Iceberg MERGE INTO — same batch_df, same keys), as the upsert module
-    documents."""
+    LOCAL-FILESYSTEM ONLY: upsert_parquet swaps the target in by
+    driver-local rename (operators/upsert.replace_table), which is neither
+    atomic for concurrent readers nor valid on HDFS/S3 object stores."""
     from us_weather_energy_analysis_pipeline_spark.operators.upsert import (
         upsert_parquet,
     )
