@@ -511,3 +511,51 @@ def test_bottom_k_sketches_plan_take_ordered(spark, sf_dir):
         assert "TakeOrderedAndProject" in plan, name
         body = plan.split("\n\n", 1)[1] if "\n\n" in plan else plan
         assert "Sort [" not in body, name
+
+
+_SHUFFLE = re.compile(r"\bExchange (hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)")
+
+
+@pytest.mark.parametrize("cities", [["Chicago", "Elmton"], None], ids=["subset", "all"])
+def test_page_frame_charts_have_no_shuffle(spark, page_gold, page_charts, cities):
+    """Over the page frame (one partition) every chart plans without a
+    shuffle Exchange; only the city dim's BroadcastExchange remains."""
+    from us_weather_energy_analysis_pipeline_spark.analytics.views import filter_view
+
+    page = filter_view(spark.read.parquet(page_gold), "2024-01-10", "2024-03-20", cities)
+    for name, chart in page_charts("Chicago"):
+        out = chart(page)
+        if not hasattr(out, "_jdf"):
+            continue
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert not _SHUFFLE.search(plan), (name, plan)
+
+
+@pytest.mark.parametrize(
+    "cities, budget",
+    [(["Elmton", "Ashford"], 12), (["Chicago", "Elmton"], 13)],
+    ids=["outside-dim", "dim-city"],
+)
+def test_page_job_count(spark, page_gold, page_charts, cities, budget):
+    """One page of all ten charts runs at most 12 jobs: the page frame's
+    checkpoint, then one job per chart, two for OLS (fit, band). A page
+    showing a city of the 5-row dim pays one more job for the dim's
+    broadcast; otherwise the frame's city filter folds the dim join away."""
+    from perfbench.spans import SparkAccount
+
+    from us_weather_energy_analysis_pipeline_spark.analytics.views import filter_view
+
+    frame = spark.read.parquet(page_gold)
+    sc = spark.sparkContext
+    group = f"page-jobs-{'-'.join(cities)}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        page = filter_view(frame, "2024-01-10", "2024-03-20", cities)
+        for _, chart in page_charts("Elmton"):
+            out = chart(page)
+            if hasattr(out, "_jdf"):
+                out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert SparkAccount(spark).read(group)["jobs"] <= budget

@@ -4,6 +4,9 @@ views 2-7 as DataFrame plans)."""
 from __future__ import annotations
 
 import datetime as dt
+import gc
+import math
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -109,3 +112,74 @@ def test_quality_timeseries_and_problems(fact):
     assert total_missing == manual_missing
     probs = problem_rows(fact, limit=10)
     assert probs.count() <= 10
+
+
+def _lazy_filter(df, start, end, cities):
+    """The page filter as a plain lazy plan: every chart re-reads gold."""
+    out = df.filter((F.col("date") >= F.lit(start).cast("date")) & (F.col("date") <= F.lit(end).cast("date")))
+    return out if cities is None else out.filter(F.col("city").isin(*cities))
+
+
+def _rows(out):
+    """A chart's result as sorted row tuples (dicts and None as they are)."""
+    if out is None or isinstance(out, dict):
+        return out
+    rows = [tuple(r) for r in out.collect()]
+    return sorted(rows, key=lambda r: tuple((v is None, 0 if v is None else v) for v in r))
+
+
+def _same(a, b) -> bool:
+    """Equal, with floats within rel 1e-9: one partition may sum in
+    another order than the lazy plan's tasks."""
+    if isinstance(a, float) and isinstance(b, float):
+        return (math.isnan(a) and math.isnan(b)) or math.isclose(a, b, rel_tol=1e-9)
+    if isinstance(a, dict) and isinstance(b, dict):
+        return a.keys() == b.keys() and all(_same(a[k], b[k]) for k in a)
+    if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+        return len(a) == len(b) and all(_same(x, y) for x, y in zip(a, b))
+    return a == b
+
+
+@pytest.mark.parametrize("cities", [["Chicago", "Phoenix", "Elmton"], None], ids=["subset", "all"])
+def test_page_frame_charts_match_lazy_filter(spark, page_gold, page_charts, cities):
+    """Every chart over the page frame equals the same chart over the
+    lazy filter plan."""
+    gold = spark.read.parquet(page_gold)
+    page = filter_view(gold, "2024-01-10", "2024-03-20", cities)
+    lazy = _lazy_filter(gold, "2024-01-10", "2024-03-20", cities)
+    assert page.rdd.getNumPartitions() == 1
+    for name, chart in page_charts("Phoenix"):
+        got, want = _rows(chart(page)), _rows(chart(lazy))
+        assert want, name
+        assert _same(got, want), name
+
+
+def test_empty_city_selection_gives_empty_page(spark, page_gold, page_charts):
+    """An empty multiselect filters every city out (reference
+    ``city.isin(selected)``); ``None`` is the no-filter default. Every chart
+    still runs on the empty page."""
+    page = filter_view(spark.read.parquet(page_gold), "2024-01-01", "2024-03-31", [])
+    for name, chart in page_charts("Chicago"):
+        out = chart(page)
+        if name == "quality_report":
+            assert out["total_rows"] == 0
+        elif name == "ols":
+            assert out is None
+        else:
+            assert out.count() == 0, name
+
+
+def test_page_frames_are_freed(spark, page_gold):
+    """Page frames do not pile up in a long dashboard session: once a
+    frame is unreachable its checkpoint blocks are released."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    gold = spark.read.parquet(page_gold)
+    for i in range(24):
+        filter_view(gold, "2024-01-01", f"2024-01-{i + 2:02d}", ["Chicago"])
+    gc.collect()
+    spark._jvm.System.gc()
+    deadline = time.monotonic() + 10
+    while jsc.getPersistentRDDs().size() - before >= 24 and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert jsc.getPersistentRDDs().size() - before < 24

@@ -1,6 +1,8 @@
 """The seven dashboard views (reference `dashboards/app.py`, SURVEY §3.2).
 
-Each view is a short lazy plan over the (cached) fact table — the engine
+Each view is a short lazy plan over the page frame that ``filter_view``
+returns: the page's filtered rows, materialised once in one partition, the
+counterpart of the reference's in-memory ``filtered_df``. The engine
 produces the DataFrames feeding the charts; rendering stays out of scope
 (SURVEY §2.10). Window functions replace the reference's join-back idioms
 (prev-day join J3 → lag; groupby-last A4 → row_number).
@@ -29,15 +31,24 @@ def filter_view(
     cities: Sequence[str] | None = None,
 ) -> DataFrame:
     """Sidebar filter context (reference F1 `app.py:442-446`): date range +
-    city multiselect. With the fact table partitioned by city, the isin
-    filter prunes partitions before any read."""
+    city multiselect (``None`` = every city, ``[]`` = none). With the fact
+    table partitioned by city, the isin filter prunes partitions before
+    any read.
+
+    Eager: the call runs one job that materialises the page's rows into a
+    single-partition local checkpoint (the page frame). Every chart over it
+    then plans without a shuffle — one partition satisfies every aggregate,
+    window and global sort — and re-reads neither parquet nor page-specific
+    literals. The checkpoint blocks live on the executors until the frame
+    is unreachable, when the ContextCleaner frees them.
+    """
     out = df.filter(
         (F.col("date") >= F.lit(str(start)).cast("date"))
         & (F.col("date") <= F.lit(str(end)).cast("date"))
     )
-    if cities:
+    if cities is not None:
         out = out.filter(F.col("city").isin(*cities))
-    return out
+    return out.coalesce(1).localCheckpoint(eager=True)
 
 
 def latest_per_city(df: DataFrame, city_dim: DataFrame | None = None) -> DataFrame:

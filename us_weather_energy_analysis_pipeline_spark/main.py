@@ -7,9 +7,9 @@ the FIXTURES F1/F2 shapes and landed as bronze JSON, one file per (kind,
 city). The run then reads back exactly the files it landed, with city
 taken from each file name, and runs one read→transform→join plan. Gold
 parquet is written once; the QC report and the CSV both come from reading
-that gold back, so the fact plan is evaluated once. With ``--online`` the
-landing step fetches from the real APIs instead; everything downstream is
-identical — the fetch layer is the only thing that changes.
+that gold back, so the fact plan is evaluated once. The CLI has no online
+mode: landing synthesized payloads is the only way in, and everything
+downstream reads the landed files.
 
 Usage:
     python -m us_weather_energy_analysis_pipeline_spark.main historical \
