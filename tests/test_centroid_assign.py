@@ -523,64 +523,3 @@ def test_update_partials_fold_equals_per_row_update(spark):
 
     with pytest.raises(ValueError, match="emit_update_partials"):
         assign_nearest_centroid(df, CENTS, emit_update_partials=True, carry_vec=True)
-
-
-def test_kmeans_iterate_converges_and_reports_history(spark):
-    """The full driver-looped build (operators.kmeans_iterate): on
-    well-separated noisy clusters the loop terminates under tol within
-    a few rounds, the shift history is the termination witness (last
-    entry < tol), and the final codebook's cells sit near the
-    generating centers. Empty-codebook input short-circuits."""
-    import numpy as np
-
-    from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
-        kmeans_iterate,
-    )
-
-    rng = np.random.default_rng(5)
-    k, per, dim = 3, 25, 8
-    rows = []
-    for lab in range(k):
-        center = np.zeros(dim)
-        center[lab] = 10.0
-        pts = center + rng.normal(0.0, 0.1, size=(per, dim))
-        rows += [
-            (lab * per + i, lab, [float(x) for x in pts[i]])
-            for i in range(per)
-        ]
-    df = _emb(spark, rows)
-
-    cents, shifts, rounds = kmeans_iterate(df, max_rounds=8, tol=1e-9)
-    assert 1 <= rounds <= 8 and len(shifts) == rounds
-    assert shifts[-1] < 1e-9, shifts
-    assert [lab for lab, _ in cents] == [0, 1, 2]
-    for lab, vec in cents:
-        assert abs(vec[lab] - 10.0) < 0.5, (lab, vec[lab])
-
-    # perturbed warm start must converge back to (near) the same fixpoint
-    warm = [(lab, [x + 0.5 for x in vec]) for lab, vec in cents]
-    cents2, shifts2, _ = kmeans_iterate(df, init_cents=warm, max_rounds=8, tol=1e-9)
-    for (l1, v1), (l2, v2) in zip(cents, cents2):
-        assert l1 == l2
-        assert max(abs(a - b) for a, b in zip(v1, v2)) < 1e-6
-
-    assert kmeans_iterate(_emb(spark, [(0, None, [1.0] * dim)])) == ([], [], 0)
-
-
-def test_kmeans_iterate_empty_cell_keeps_centroid(spark):
-    """A cell that wins no rows keeps its previous centroid (the
-    empty-cluster convention) and contributes zero shift, so the loop
-    still terminates."""
-    from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
-        kmeans_iterate,
-    )
-
-    rows = [(0, 0, [1.0, 0.0]), (1, 0, [0.9, 0.1])]
-    # cell 7 is far from every point: never wins a row
-    init = [(0, [1.0, 0.0]), (7, [-1.0, 0.0])]
-    cents, shifts, rounds = kmeans_iterate(
-        _emb(spark, rows), init_cents=init, max_rounds=4, tol=1e-9
-    )
-    d = dict(cents)
-    assert d[7] == [-1.0, 0.0]
-    assert shifts[-1] < 1e-9

@@ -19,8 +19,12 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     from us_weather_energy_analysis_pipeline_spark.operators import cache
 
     q = REGISTRY[name]
-    sdf = q.spark_fn(spark, sf_dir).toPandas()
-    cache.release_all()
+    try:
+        sdf = q.spark_fn(spark, sf_dir).toPandas()
+    finally:
+        # release on every path: a query that raises must not leak its
+        # operator persists into the later parametrized cases
+        cache.release_all()
     if q.oracle is None:
         # rows-only contract: must run and return a stable schema
         assert sdf is not None

@@ -319,13 +319,12 @@ def test_phash_image_bands_gate(spark):
 
 
 def test_pil_decode_paths(spark):
-    """decode_image/resize_images are real when Pillow exists, honest
-    NotImplementedError otherwise (this container has no PIL)."""
+    """decode_image is real when Pillow exists, an honest
+    NotImplementedError otherwise."""
     import pytest as _pytest
 
     from us_weather_energy_analysis_pipeline_spark.operators.multimodal import (
         decode_image,
-        resize_images,
     )
 
     blobs = spark.createDataFrame([(1, b"\x89PNG")], "doc_id long, payload binary")
@@ -334,8 +333,6 @@ def test_pil_decode_paths(spark):
     except ImportError:
         with _pytest.raises(NotImplementedError):
             decode_image(blobs)
-        with _pytest.raises(NotImplementedError):
-            resize_images(blobs, 8, 8)
         return
     # PIL present: undecodable payload must yield null metadata, not fail
     rows = decode_image(blobs).collect()

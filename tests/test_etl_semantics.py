@@ -16,7 +16,6 @@ from us_weather_energy_analysis_pipeline_spark.functions.scalars import (
     row_avg,
     temp_range_bin,
 )
-from us_weather_energy_analysis_pipeline_spark.operators.spine import missing_days
 from us_weather_energy_analysis_pipeline_spark.plans.etl import (
     build_fact,
     process_energy,
@@ -263,17 +262,6 @@ class TestFactAndQuality:
         assert s == e == dt.date(2024, 6, 30)
         with pytest.raises(ValueError):
             resolve_date_range("bogus")
-
-
-class TestSpineOps:
-    def test_missing_days_detection(self, spark):
-        df = spark.createDataFrame(
-            [(dt.date(2024, 1, 1), "A"), (dt.date(2024, 1, 3), "A")],
-            "date date, city string",
-        )
-        miss = missing_days(df, "date", ("city",), "2024-01-01", "2024-01-04").collect()
-        got = sorted((r["date"], r["city"]) for r in miss)
-        assert got == [(dt.date(2024, 1, 2), "A"), (dt.date(2024, 1, 4), "A")]
 
 
 class TestStats:

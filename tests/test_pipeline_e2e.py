@@ -5,6 +5,10 @@ workflow, SURVEY §3.1, in one lazy DAG)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -114,3 +118,30 @@ def test_csv_header_is_fact_column_order(spark, tmp_path):
     assert headers == {",".join(FACT_SCHEMA.names)}
     csv = spark.read.option("header", True).csv(str(tmp_path / "processed" / "weather_energy_csv"))
     assert csv.count() == 2
+
+
+def test_cli_realtime_prints_json_report(tmp_path):
+    """``python -m ...main realtime`` runs the pipeline in its own JVM,
+    prints the QC report as real JSON (``missing_values`` an object, not
+    a repr string) and writes both gold sinks under ``--out``."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    proc = subprocess.run(
+        [sys.executable, "-m", "us_weather_energy_analysis_pipeline_spark.main",
+         "realtime", "--out", str(tmp_path)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    report = json.loads(proc.stdout)
+    assert set(report) >= {
+        "total_rows", "missing_values", "temp_outliers_count",
+        "negative_energy_count", "latest_date", "days_since_latest",
+    }
+    # realtime runs on yesterday, so the counts depend on the date; the
+    # shape does not
+    missing = report["missing_values"]
+    assert set(missing) == {"temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh"}
+    assert all(isinstance(v, int) for v in missing.values()), missing
+    assert (tmp_path / "processed" / "weather_energy_parquet").is_dir()
+    assert (tmp_path / "processed" / "weather_energy_csv").is_dir()

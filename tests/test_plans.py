@@ -420,6 +420,31 @@ def test_differenced_view_window_sits_on_daily_series(spark):
     assert "Aggregate [date" in below, plan
 
 
+def _file_column_ranges(path: str, column: str) -> list[tuple[object, object]]:
+    """(min, max) of ``column`` per parquet data file under ``path`` —
+    footer statistics only (what a scan's file-skipping consults)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(path, name)).metadata
+        idx = md.schema.to_arrow_schema().get_field_index(column)
+        lo, hi = None, None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None or not st.has_min_max:
+                continue
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        if lo is not None:
+            out.append((lo, hi))
+    return out
+
+
 def test_compact_parquet_range_clustering_disjoint_files(spark, tmp_path):
     """r7 cluster_by: output files must own DISJOINT slices of the cluster
     key (footer min/max is what file-skipping consults), and target_bytes
@@ -428,7 +453,6 @@ def test_compact_parquet_range_clustering_disjoint_files(spark, tmp_path):
 
     from us_weather_energy_analysis_pipeline_spark.operators.compact import (
         compact_parquet,
-        file_column_ranges,
     )
 
     path = str(tmp_path / "clust")
@@ -440,7 +464,7 @@ def test_compact_parquet_range_clustering_disjoint_files(spark, tmp_path):
         base.filter(f"v >= {i*2500} and v < {(i+1)*2500}").repartition(2).write.mode(
             "append"
         ).parquet(path)
-    spans = file_column_ranges(path, "k")
+    spans = _file_column_ranges(path, "k")
     assert len(spans) >= 8
     # un-clustered: ranges overlap massively (each file ~ full keyspace)
     overlapping = sum(
@@ -453,7 +477,7 @@ def test_compact_parquet_range_clustering_disjoint_files(spark, tmp_path):
 
     n = compact_parquet(spark, path, target_files=4, cluster_by=("k",))
     assert n == 10_000
-    spans = sorted(file_column_ranges(path, "k"))
+    spans = sorted(_file_column_ranges(path, "k"))
     assert len(spans) == len(glob.glob(f"{path}/*.parquet")) == 4
     # clustered: consecutive file ranges must not overlap
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):

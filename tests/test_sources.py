@@ -1,21 +1,14 @@
 """Source/sink layer tests: JSON landing round-trips with pinned schemas,
-injectable HTTP fetchers (no network), CSV/parquet sinks."""
+multi-page and malformed landings, CSV/parquet sinks. Payloads land
+through ``land_json``; there is no HTTP fetcher (the landing zone is the
+interface)."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
-
-import pytest
 
 from us_weather_energy_analysis_pipeline_spark.sources.eia import read_eia_landing
-from us_weather_energy_analysis_pipeline_spark.sources.fetch import (
-    fetch_eia_pages,
-    fetch_noaa,
-    fetch_with_retries,
-    land_json,
-    landing_path,
-)
+from us_weather_energy_analysis_pipeline_spark.sources.fetch import land_json, landing_path
 from us_weather_energy_analysis_pipeline_spark.sources.noaa import read_noaa_landing
 
 NOAA_PAYLOAD = {
@@ -34,14 +27,6 @@ EIA_PAYLOAD = {
         ],
     }
 }
-
-
-class FakeResp:
-    def __init__(self, payload, status=200):
-        self._p, self.status_code = payload, status
-
-    def json(self):
-        return self._p
 
 
 START, END = dt.date(2025, 7, 1), dt.date(2025, 7, 31)
@@ -66,55 +51,6 @@ def test_eia_landing_roundtrip(spark, tmp_path):
     assert len(rows) == 2
     assert rows[0]["value_str"] == "512.3"  # stays string until transform
     assert all(r["city"] == "New York" for r in rows)
-
-
-def test_fetch_retry_then_success():
-    calls = []
-
-    def flaky(url, params, headers):
-        calls.append(url)
-        if len(calls) < 3:
-            return FakeResp({}, status=500)
-        return FakeResp({"ok": True})
-
-    out = fetch_with_retries("http://x", {}, {}, http_get=flaky, sleep=lambda s: None)
-    assert out == {"ok": True} and len(calls) == 3
-
-
-def test_fetch_exhausted_raises():
-    def dead(url, params, headers):
-        return FakeResp({}, status=503)
-
-    with pytest.raises(RuntimeError, match="after 3 attempts"):
-        fetch_with_retries("http://x", {}, {}, http_get=dead, sleep=lambda s: None)
-
-
-def test_fetch_noaa_params():
-    seen = {}
-
-    def capture(url, params, headers):
-        seen.update(params)
-        return FakeResp(NOAA_PAYLOAD)
-
-    out = fetch_noaa("tok", "GHCND:X", "2025-01-01", "2025-06-30", http_get=capture)
-    assert out == NOAA_PAYLOAD
-    assert seen["datatypeid"] == "TMAX,TMIN" and seen["units"] == "metric"
-    assert seen["limit"] == 1000
-
-
-def test_fetch_eia_pagination():
-    pages_served = []
-
-    def paged(url, params, headers):
-        if params.get("length") == 0:
-            return FakeResp({"response": {"total": 12000}})
-        pages_served.append(params["offset"])
-        return FakeResp(EIA_PAYLOAD)
-
-    pages = fetch_eia_pages("key", "NYIS", "2025-01-01T00", "2025-06-30T23",
-                            page_size=5000, http_get=paged)
-    assert pages_served == [0, 5000, 10000]
-    assert len(pages) == 3
 
 
 def test_write_fact_roundtrip(spark, tmp_path):
@@ -161,19 +97,18 @@ def test_malformed_landing_payloads(spark, tmp_path):
 
 
 class TestRecordedCassette:
-    """Recorded-fixture ("cassette") run of the full online path: canned
-    multi-page EIA + NOAA JSON served through the REAL pagination/backoff
-    loop (reference data_fetcher.py:69-121 semantics — count probe,
-    offset pages, asc period sort), then landed and stitched in-engine.
-    Asserts page stitching (every row exactly once, order re-imposed) and
-    the retry schedule (2·2^attempt backoff on a transient 500)."""
+    """Recorded-fixture ("cassette") landing: canned multi-page EIA JSON
+    in the reference's page shape (data_fetcher.py:69-121 — offset pages
+    sorted asc by period) and a NOAA payload, landed verbatim and read
+    back in-engine. Asserts page stitching (every row exactly once, order
+    re-imposed) and the NOAA values through the reader's cast."""
 
     TOTAL, PAGE = 12, 5
 
     def _cassette(self):
         periods = [f"2025-07-0{1 + h // 24}T{h % 24:02d}" for h in range(self.TOTAL)]
-        pages = {
-            off: {
+        pages = [
+            {
                 "response": {
                     "total": self.TOTAL,
                     "data": [
@@ -185,36 +120,13 @@ class TestRecordedCassette:
                 }
             }
             for off in range(0, self.TOTAL, self.PAGE)
-        }
+        ]
         return periods, pages
 
-    def test_eia_pagination_stitching_and_backoff(self, spark, tmp_path):
+    def test_eia_pagination_stitching(self, spark, tmp_path):
         periods, pages = self._cassette()
-        slept, calls, failed_once = [], [], []
-
-        def server(url, params, headers):
-            calls.append(dict(params))
-            assert params["sort[0][column]"] == "period"
-            assert params["sort[0][direction]"] == "asc"
-            if params.get("length") == 0:  # count probe
-                return FakeResp({"response": {"total": self.TOTAL}})
-            off = params["offset"]
-            if off == self.PAGE and not failed_once:  # transient 500 on page 2
-                failed_once.append(True)
-                return FakeResp({}, status=500)
-            return FakeResp(pages[off])
-
-        got = fetch_eia_pages(
-            "key", "NYIS", "2025-07-01T00", "2025-07-01T23",
-            page_size=self.PAGE, http_get=server, sleep=slept.append,
-        )
-        # retry schedule: exactly one backoff sleep of 2.0 (= 2 * 2^0)
-        assert slept == [2.0]
-        # probe + 3 pages + 1 retry = 5 requests; offsets strictly paged
-        assert [c.get("offset") for c in calls] == [None, 0, self.PAGE,
-                                                   self.PAGE, 2 * self.PAGE]
         # land each page verbatim, then stitch in-engine
-        for i, p in enumerate(got):
+        for i, p in enumerate(pages):
             land_json(p, str(tmp_path / f"eia_page_{i}.json"))
         stitched = read_eia_landing(spark, str(tmp_path / "eia_page_*.json"))
         rows = stitched.orderBy("period_str").collect()
@@ -223,13 +135,7 @@ class TestRecordedCassette:
                                                   for i in range(self.TOTAL)}
 
     def test_noaa_cassette_through_transform(self, spark, tmp_path):
-        def server(url, params, headers):
-            assert headers == {"token": "tok"} and params["datasetid"] == "GHCND"
-            return FakeResp(NOAA_PAYLOAD)
-
-        payload = fetch_noaa("tok", "GHCND:X", "2025-07-01", "2025-07-31",
-                             http_get=server)
-        land_json(payload, str(tmp_path / "noaa.json"))
+        land_json(NOAA_PAYLOAD, str(tmp_path / "noaa.json"))
         landed = read_noaa_landing(spark, str(tmp_path / "noaa.json"))
         got = {(r["datatype"], r["value_c"]) for r in landed.collect()}
         assert got == {("TMAX", 36.1), ("TMIN", 25.6)}

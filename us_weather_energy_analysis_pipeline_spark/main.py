@@ -1,19 +1,18 @@
 """CLI entry — parity with the reference's ``python main.py
 {historical|realtime}`` (reference `main.py:40-55`).
 
-Offline-first: with ``--offline`` (default — this container has no
-network) the raw NOAA/EIA payloads are synthesized deterministically in
-the FIXTURES F1/F2 shapes and landed as bronze JSON, one file per (kind,
-city). The run then reads back exactly the files it landed, with city
-taken from each file name, and runs one read→transform→join plan. Gold
-parquet is written once; the QC report and the CSV both come from reading
-that gold back, so the fact plan is evaluated once. The CLI has no online
-mode: landing synthesized payloads is the only way in, and everything
-downstream reads the landed files.
+The reference fetches NOAA/EIA over HTTP (`data_fetcher.py:8-125`); this
+port has no fetcher, because the bronze landing zone is its interface.
+The raw payloads are synthesized deterministically in the FIXTURES F1/F2
+shapes and landed as bronze JSON, one file per (kind, city). The run then
+reads back exactly the files it landed, with city taken from each file
+name, and runs one read→transform→join plan. Gold parquet is written
+once; the QC report and the CSV both come from reading that gold back, so
+the fact plan is evaluated once. The QC report is printed as JSON.
 
 Usage:
     python -m us_weather_energy_analysis_pipeline_spark.main historical \
-        --out /tmp/weather_energy --offline
+        --out /tmp/weather_energy
 """
 
 from __future__ import annotations
@@ -113,12 +112,6 @@ def main() -> None:
     parser = argparse.ArgumentParser(description="weather+energy ETL (Spark)")
     parser.add_argument("mode", choices=["historical", "realtime"])
     parser.add_argument("--out", default="data")
-    parser.add_argument(
-        "--offline",
-        action="store_true",
-        default=True,
-        help="synthesize raw payloads instead of fetching (default: on)",
-    )
     args = parser.parse_args()
     logging.basicConfig(
         level=logging.INFO, format="%(asctime)s %(name)s %(levelname)s %(message)s"
@@ -128,7 +121,7 @@ def main() -> None:
 
     spark = get_spark("weather-energy-pipeline")
     report = run_pipeline(spark, args.mode, args.out)
-    print(json.dumps({k: str(v) for k, v in report.items()}, indent=2))
+    print(json.dumps(report, indent=2, default=str))
     spark.stop()
 
 

@@ -10,9 +10,8 @@ unpersist inside the operator would just force a recompute.
 
 The contract: operators register their persisted handles via
 :func:`track`; loop drivers (the corpus sweep ``bench.py``, the
-``perfbench`` corpus workload, ``scripts/verify_local.py``,
-``scripts/scale_probe.py``, ``scripts/dump_plans.py`` and the test
-fixtures) call :func:`release_all` between queries. A long-lived
+``perfbench`` corpus workload and the oracle and fuzz tests) call
+:func:`release_all` between queries. A long-lived
 application that never calls it degrades gracefully to Spark's LRU block
 eviction — the same behavior as before tracking existed.
 """

@@ -18,7 +18,6 @@ via plan_meta.input_bytes), so the op needs no tuning as the table grows.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import SparkSession
 
@@ -86,27 +85,3 @@ def compact_parquet(
         out = out.sortWithinPartitions(*sort_within_by)
     replace_table(out, path, partition_by=partition_by)
     return spark.read.parquet(path).count()
-
-
-def file_column_ranges(path: str, column: str) -> list[tuple[object, object]]:
-    """(min, max) of ``column`` per parquet data file under ``path`` —
-    footer statistics only (what a scan's file-skipping consults). Test
-    and audit helper for the clustering contract."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        idx = md.schema.to_arrow_schema().get_field_index(column)
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                continue
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if lo is not None:
-            out.append((lo, hi))
-    return out

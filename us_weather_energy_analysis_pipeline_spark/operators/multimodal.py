@@ -291,46 +291,6 @@ def decode_image(blobs: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(blobs: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize (PIL behind an import-try): payload → re-encoded
-    PNG payload at (width, height); undecodable payloads pass through as
-    null. One mapInPandas, binary in / binary out."""
-    try:
-        import PIL.Image  # noqa: F401, PLC0415
-    except ImportError as e:
-        raise NotImplementedError(
-            "resize requires Pillow; API contract: (payload)->(payload) mapInPandas"
-        ) from e
-
-    def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from PIL import Image
-
-        for pdf in batches:
-            outs = []
-            for p in pdf["payload"]:
-                try:
-                    with Image.open(io.BytesIO(p)) as im:
-                        buf = io.BytesIO()
-                        im.resize((width, height)).save(buf, format="PNG")
-                        outs.append(buf.getvalue())
-                except Exception:
-                    outs.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": outs,
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                }
-            )
-
-    return blobs.mapInPandas(
-        _resize_batch, "doc_id bigint, payload binary, width int, height int"
-    )
-
-
 def frame_sample_bytes(
     blobs: DataFrame, frame_size: int = 16, every_n: int = 4
 ) -> DataFrame:

@@ -369,38 +369,6 @@ def _flat_dot_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def _flat_cosine_cols(
-    df: DataFrame, a: str, b: str, dim: int, out: str = "cosine"
-) -> DataFrame:
-    """Append ``out`` = 6-dp-rounded sequential-fold cosine of two array
-    columns via the flat codegen form. NULL on zero norm, NULL input, or
-    either side's width differing from ``dim`` (the explicit width guard
-    keeps wrong-width rows at the kernel paths' NULL-score semantics —
-    without it a LONGER vector would silently score on its first ``dim``
-    elements). Contract: ``dim`` is the corpus's uniform dimensionality;
-    similarity ops are only defined over uniform dims anyway (the ragged
-    guards elsewhere raise)."""
-    # norms are self-dots — ONE string builder keeps the three chains
-    # bit-identical by construction (review r9: no hand-synced copies)
-    na = _flat_dot_sql(a, a, dim)
-    nb = _flat_dot_sql(b, b, dim)
-    staged = df.withColumns(
-        {
-            "_fd": F.expr(_flat_dot_sql(a, b, dim)),
-            "_fden": F.expr(f"SQRT({na}) * SQRT({nb})"),
-        }
-    )
-    return staged.withColumn(
-        out,
-        F.when(
-            (F.size(a) == dim)
-            & (F.size(b) == dim)
-            & (F.col("_fden") != F.lit(0.0)),
-            _dround6(F.col("_fd") / F.col("_fden")),
-        ),
-    ).drop("_fd", "_fden")
-
-
 def _dround6(c: Column) -> Column:
     """Column twin of the in-kernel ``drnd6`` / corpus `_util.dround(…, 6)`
     (DuckDB's binary std::round): signum·floor(|x|·1e6 + 0.5)/1e6, same
@@ -1214,102 +1182,6 @@ def assign_nearest_centroid(
             yield pd.DataFrame(cols)
 
     return corpus.select(*need).mapInPandas(gen, out_schema)
-
-
-def fold_update_partials(partials: DataFrame) -> list[tuple[int, int, list[float]]]:
-    """Fold the ``emit_update_partials`` stream into the updated codebook:
-    per-dim Σ vsum / Σ cnt per cell, aggregated IN SPARK (map-side
-    partial, exchange bounded by n_cells × dim × partitions) and
-    collected as ``[(label, n_assigned, new_centroid), ...]`` sorted by
-    label — the same n_cells × dim driver-boundedness class as
-    ``collect_centroids``. Cells that won no rows simply don't appear
-    (their centroid is unchanged; callers keep the old vector)."""
-    rows = (
-        partials.select(
-            "assigned_label", "cnt", F.posexplode("vsum").alias("pos", "s")
-        )
-        .groupBy("assigned_label", "pos")
-        .agg(F.sum("s").alias("s"), F.sum("cnt").alias("c"))
-        .collect()
-    )
-    cmap: dict[int, dict[int, float]] = {}
-    nmap: dict[int, int] = {}
-    for r in rows:
-        lab = int(r["assigned_label"])
-        cmap.setdefault(lab, {})[int(r["pos"])] = r["s"] / r["c"]
-        nmap[lab] = int(r["c"])
-    return [
-        (lab, nmap[lab], [dims[p] for p in sorted(dims)])
-        for lab, dims in sorted(cmap.items())
-    ]
-
-
-def kmeans_iterate(
-    corpus: DataFrame,
-    init_cents: list[tuple[int, list[float]]] | None = None,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    max_rounds: int = 10,
-    tol: float = 1e-6,
-) -> tuple[list[tuple[int, list[float]]], list[float], int]:
-    """Full iterative (spherical-assignment) k-means — the codebook BUILD
-    loop of IVF indexing and SemDeDup-style semantic dedup, driver-looped
-    over ``embed_kmeans_round``'s oracle-pinned single step until the
-    max per-cell L2 shift drops below ``tol`` or ``max_rounds`` is hit.
-
-    Per round: ONE fused kernel pass (``assign_nearest_centroid`` with
-    ``emit_update_partials`` — BLAS argmax + in-kernel update partials,
-    no per-row Arrow egress) and ONE n_cells × dim-bounded aggregate
-    collect (``fold_update_partials``). Driver state is the codebook
-    alone (n_cells × dim doubles — the IVF codebook contract); nothing
-    corpus-sized is ever collected or broadcast, so the loop runs the
-    same way against 2 000 rows or 100 TB — rounds are sequential by
-    nature (Lloyd is inherently iterative), each round is one
-    scan-parallel job wave.
-
-    Seeds from ``init_cents`` or, when None, from the per-``label_col``
-    means (``collect_centroids`` — the corpus's labeled warm start). A
-    cell that wins no rows keeps its previous centroid (the standard
-    empty-cluster convention; its shift is 0 that round). Returns
-    ``(final codebook, per-round max-shift history, rounds run)``.
-
-    Convergence (shift → 0 once assignments stabilize) is pinned by
-    ``tests/test_centroid_assign.py``; the single round's values are
-    oracle-pinned via the ``embed_kmeans_round`` corpus query."""
-    import math
-
-    cents = (
-        init_cents
-        if init_cents is not None
-        else collect_centroids(
-            corpus.filter(F.col(label_col).isNotNull()), label_col, vec_col
-        )
-    )
-    if not cents:
-        return [], [], 0
-    shifts: list[float] = []
-    for rnd in range(max_rounds):
-        partials = assign_nearest_centroid(
-            corpus, cents, vec_col=vec_col, emit_update_partials=True
-        )
-        updated = {lab: vec for lab, _n, vec in fold_update_partials(partials)}
-        new_cents = [
-            (lab, updated.get(lab, old)) for lab, old in cents
-        ]
-        max_shift = max(
-            (
-                math.sqrt(
-                    sum((a - b) * (a - b) for a, b in zip(new, old))
-                )
-                for (_l1, new), (_l2, old) in zip(new_cents, cents)
-            ),
-            default=0.0,
-        )
-        shifts.append(max_shift)
-        cents = new_cents
-        if max_shift < tol:
-            break
-    return cents, shifts, len(shifts)
 
 
 def ivf_topk(

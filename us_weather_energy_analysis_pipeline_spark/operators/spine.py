@@ -66,23 +66,3 @@ def complete_date_range(
     key_dim = df.select(*keys).distinct()
     grid = spine.crossJoin(F.broadcast(key_dim))
     return grid.join(df, [date_col, *keys], "left")
-
-
-def missing_days(
-    df: DataFrame,
-    date_col: str = "date",
-    keys: tuple[str, ...] = ("city",),
-    start: dt.date | str | None = None,
-    end: dt.date | str | None = None,
-) -> DataFrame:
-    """Days in the expected calendar with no observation per key
-    (reference J5 `pipeline.py:42-45` set difference) — a left-anti join."""
-    spark = df.sparkSession
-    if start is not None and end is not None:
-        spine = date_spine(spark, start, end, date_col)
-    else:
-        spine = spine_from_bounds(df, date_col, date_col)
-    key_dim = df.select(*keys).distinct()
-    grid = spine.crossJoin(F.broadcast(key_dim))
-    present = df.select(date_col, *keys).distinct()
-    return grid.join(present, [date_col, *keys], "left_anti")

@@ -1,1 +1,1 @@
-"""Sources & sinks: raw JSON landing (bronze), normalized readers, fetchers."""
+"""Sources & sinks: raw JSON landing (bronze), normalized readers, synthetic datagen."""

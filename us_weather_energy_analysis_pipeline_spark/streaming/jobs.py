@@ -59,20 +59,6 @@ def stream_daily_rollup(
     )
 
 
-def run_available_now(sdf: DataFrame, query_name: str, checkpoint: str) -> None:
-    """Drain all available input into an in-memory sink and stop — the
-    batch-like test/backfill trigger; continuous mode is the same plan."""
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete" if sdf.isStreaming else "append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def sessionize(
     df: DataFrame,
     ts_col: str = "ts",
