@@ -583,3 +583,44 @@ def test_page_job_count(spark, page_gold, page_charts, cities, budget):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert SparkAccount(spark).read(group)["jobs"] <= budget
+
+
+def test_gold_write_job_count(spark, tmp_path):
+    """The gold parquet write of a 2-city historical ETL runs at most 11
+    jobs: each source pays one calendar join, whose city dim also carries
+    the observed bounds the energy side's 0-vs-NULL rule reads."""
+    import datetime as dt
+
+    from perfbench.spans import SparkAccount
+
+    from us_weather_energy_analysis_pipeline_spark import main
+    from us_weather_energy_analysis_pipeline_spark.plans.etl import (
+        build_fact,
+        process_energy,
+        process_weather,
+        resolve_date_range,
+        write_fact,
+    )
+    from us_weather_energy_analysis_pipeline_spark.sources.eia import read_eia_landing
+    from us_weather_energy_analysis_pipeline_spark.sources.fetch import land_json, landing_path
+    from us_weather_energy_analysis_pipeline_spark.sources.noaa import read_noaa_landing
+
+    start, end = resolve_date_range("historical", dt.date(2024, 7, 1))
+    cities = ("Chicago", "Elmton")
+    raw = str(tmp_path)
+    weather_files = [landing_path(raw, "weather", c, start, end) for c in cities]
+    energy_files = [landing_path(raw, "energy", c, start, end) for c in cities]
+    for city, w, e in zip(cities, weather_files, energy_files):
+        land_json(main.synth_noaa_payload(city, start, end), w)
+        land_json(main.synth_eia_payload(city, start, end), e)
+
+    sc = spark.sparkContext
+    group = "gold-write-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        weather = process_weather(read_noaa_landing(spark, weather_files), start, end)
+        energy = process_energy(read_eia_landing(spark, energy_files), start, end)
+        write_fact(build_fact(weather, energy), str(tmp_path / "gold"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert SparkAccount(spark).read(group)["jobs"] <= 11

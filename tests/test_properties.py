@@ -12,9 +12,7 @@ from hypothesis import given, settings, strategies as st
 
 from us_weather_energy_analysis_pipeline_spark.corpus._util import dround
 from us_weather_energy_analysis_pipeline_spark.operators.asof import asof_join_backward
-from us_weather_energy_analysis_pipeline_spark.operators.resample import (
-    resample_daily_sum,
-)
+from us_weather_energy_analysis_pipeline_spark.plans.etl import process_energy
 
 finite_doubles = st.floats(
     min_value=-1e9, max_value=1e9, allow_nan=False, allow_infinity=False
@@ -94,15 +92,14 @@ def test_asof_matches_bruteforce(spark, left_ts, right_rows):
     )
 )
 def test_resample_matches_pandas(spark, rows):
-    """resample_daily_sum must replicate pandas set_index().resample('D')
-    .sum() exactly (SURVEY §7.3 A2): observed-range days fill 0.0."""
+    """process_energy in observed mode must replicate pandas
+    set_index().resample('D').sum() exactly (SURVEY §7.3 A2): observed-range
+    days fill 0.0."""
     df = spark.createDataFrame(
-        [("X", t, v) for t, v in rows], "city string, ts timestamp, value double"
+        [("X", t.isoformat(), None if v is None else repr(v)) for t, v in rows],
+        "city string, period_str string, value_str string",
     )
-    got = {
-        r["date"]: r["daily"]
-        for r in resample_daily_sum(df, "ts", "value", "daily", keys=("city",)).collect()
-    }
+    got = {r["date"]: r["energy_demand_gwh"] for r in process_energy(df).collect()}
     pdf = pd.DataFrame(rows, columns=["ts", "value"]).set_index("ts")
     want = pdf.resample("D")["value"].sum()
     assert len(got) == len(want)

@@ -1,8 +1,7 @@
 """Reusable relational operators, each designed around its shuffle:
 
-- ``spine``      calendar completion (generated spine LEFT JOIN facts)
-- ``resample``   pandas-parity daily resampling (0.0-vs-NULL semantics)
-- ``impute``     per-group mean imputation via partition windows
+- ``spine``      calendar completion (generated spine LEFT JOIN facts),
+                 each row carrying its city's observed first/last day
 - ``dedup``      near-dup families: MinHash+LSH, SimHash, shingle Jaccard
 - ``components`` connected components (dedup pairs → clusters)
 - ``similarity`` vector search: brute-force, IVF, hyperplane-LSH

@@ -7,10 +7,15 @@ and energy are each ONE plan over all cities, and the final fact table is
 one join — Spark parallelizes by partition, the per-city loop disappears
 (SURVEY §3.1 mapping).
 
+Each source gets exactly one calendar join (`operators/spine.py`), whose
+city dim also carries each city's observed first/last day.
+
 Semantic parity points (SURVEY §7.3), each unit-tested:
-- A1 pivot resolves duplicate (date, datatype) with mean;
+- A1 pivot is one conditional aggregate, ``avg(when(datatype = ...))``, so
+  duplicate (date, datatype) resolve with mean;
 - C→F conversion happens BEFORE the pivot (`data_processor.py:36` vs `:48`);
-- A2 resample: observed-range days fill 0.0; requested-range-only days NULL;
+- A2 resample via the observed bounds: days inside a city's observed range
+  fill 0.0 (all-garbage days too); requested-range-only days stay NULL;
 - N1 imputation mean is per-city over present values, AFTER the spine join;
 - P7 temp_avg skips missing sides (pandas mean(axis=1) skipna).
 """
@@ -19,20 +24,14 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.functions.scalars import (
     celsius_to_fahrenheit,
     row_avg,
 )
-from us_weather_energy_analysis_pipeline_spark.operators.impute import impute_group_mean
-from us_weather_energy_analysis_pipeline_spark.operators.resample import (
-    resample_daily_sum,
-)
-from us_weather_energy_analysis_pipeline_spark.operators.spine import (
-    complete_date_range,
-)
+from us_weather_energy_analysis_pipeline_spark.operators.spine import complete_date_range
 from us_weather_energy_analysis_pipeline_spark.operators.upsert import replace_table
 
 
@@ -60,8 +59,8 @@ def process_weather(
     (reference `process_weather_data` data_processor.py:24-62).
 
     Steps: truncate date (P2) → convert °C→°F BEFORE pivot (P1) → EAV
-    pivot with mean dedup (A1) → spine-join to the requested range (J4) →
-    per-city mean imputation (N1) → row avg (P7).
+    pivot as one conditional aggregate, mean dedup (A1) → spine-join to the
+    requested range (J4) → per-city mean imputation (N1) → row avg (P7).
     """
     obs = long_obs.select(
         F.to_date(F.substring_index("date_str", "T", 1)).alias("date"),
@@ -69,15 +68,21 @@ def process_weather(
         "datatype",
         celsius_to_fahrenheit("value_c").alias("value_f"),
     )
-    wide = (
-        obs.groupBy("date", "city")
-        .pivot("datatype", ["TMAX", "TMIN"])
-        .agg(F.avg("value_f"))
-        .withColumnRenamed("TMAX", "temp_max_f")
-        .withColumnRenamed("TMIN", "temp_min_f")
+    wide = obs.groupBy("date", "city").agg(
+        *(
+            F.avg(F.when(F.col("datatype") == kind, F.col("value_f"))).alias(col)
+            for kind, col in (("TMAX", "temp_max_f"), ("TMIN", "temp_min_f"))
+        )
     )
-    complete = complete_date_range(wide, "date", ("city",), start, end)
-    imputed = impute_group_mean(complete, ["temp_max_f", "temp_min_f"], ["city"])
+    per_city = Window.partitionBy("city")
+    imputed = complete_date_range(wide, start, end).select(
+        "date",
+        "city",
+        *(
+            F.coalesce(c, F.avg(c).over(per_city)).alias(c)
+            for c in ("temp_max_f", "temp_min_f")
+        ),
+    )
     return imputed.withColumn("temp_avg_f", row_avg("temp_max_f", "temp_min_f"))
 
 
@@ -91,8 +96,11 @@ def process_energy(
     data_processor.py:64-85).
 
     Steps: timestamp parse (P3) → numeric coercion null-on-garbage (P4,
-    try_cast ≡ pd.to_numeric errors='coerce') → daily resample with
-    pandas parity (A2) → requested-range spine (J4) → project (P6).
+    try_cast ≡ pd.to_numeric errors='coerce') → daily sum (A2) →
+    requested-range spine (J4) → project (P6). The spine's observed bounds
+    give pandas ``resample('D').sum()`` parity: a day inside the city's
+    observed range sums to 0.0 even with no numeric reading; a day only in
+    the requested range stays NULL.
     """
     readings = hourly.select(
         F.coalesce(
@@ -103,11 +111,18 @@ def process_energy(
         "city",
         F.expr("try_cast(value_str as double)").alias("value_mwh"),
     ).filter(F.col("ts").isNotNull())
-    daily = resample_daily_sum(
-        readings, "ts", "value_mwh", "energy_demand_gwh", keys=("city",)
+    daily = readings.groupBy("city", F.to_date("ts").alias("date")).agg(
+        F.sum("value_mwh").alias("energy_demand_gwh")
     )
-    complete = complete_date_range(daily, "date", ("city",), start, end)
-    return complete.select("date", "city", "energy_demand_gwh")
+    complete = complete_date_range(daily, start, end)
+    observed = F.col("date").between(F.col("first_day"), F.col("last_day"))
+    return complete.select(
+        "date",
+        "city",
+        F.when(observed, F.coalesce("energy_demand_gwh", F.lit(0.0))).alias(
+            "energy_demand_gwh"
+        ),
+    )
 
 
 def build_fact(weather: DataFrame, energy: DataFrame) -> DataFrame:

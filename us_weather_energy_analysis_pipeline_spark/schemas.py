@@ -88,26 +88,6 @@ CITIES_SCHEMA = T.StructType(
     ]
 )
 
-# Normalized (silver) weather observations, one row per (city, date).
-WEATHER_SCHEMA = T.StructType(
-    [
-        T.StructField("date", T.DateType()),
-        T.StructField("city", T.StringType()),
-        T.StructField("temp_max_f", T.DoubleType()),
-        T.StructField("temp_min_f", T.DoubleType()),
-        T.StructField("temp_avg_f", T.DoubleType()),
-    ]
-)
-
-# Normalized (silver) energy, one row per (city, date).
-ENERGY_SCHEMA = T.StructType(
-    [
-        T.StructField("date", T.DateType()),
-        T.StructField("city", T.StringType()),
-        T.StructField("energy_demand_gwh", T.DoubleType()),
-    ]
-)
-
 DEFAULT_QUALITY_CONFIG: dict = {
     "data_quality": {"temp_outlier_fahrenheit": {"max": 130, "min": -50}}
 }

@@ -3,7 +3,8 @@ is a yesterday-only batch rerun — here it becomes a real incremental
 stream over the raw landing zone).
 
 - ``stream_daily_rollup``: file source → 1-day tumbling window with a
-  watermark for late data — the streaming twin of operators/resample.
+  watermark for late data — the streaming twin of the ETL's daily
+  energy sum (`plans/etl.py process_energy`).
 - ``sessionize``: native ``session_window`` (gap-based), usable in both
   batch and streaming plans.
 - ``stateful_running_total``: applyInPandasWithState — the escape hatch
