@@ -191,6 +191,47 @@ class TestWeatherPipeline:
         }
         assert out == {dt.date(2024, 1, 1): 68.0, dt.date(2024, 1, 2): 68.0}
 
+    def test_malformed_date_reads_as_null(self, spark, tmp_path):
+        """A malformed NOAA date drops its reading, as a missing date does,
+        instead of aborting the multi-city ETL (the reference's
+        ``pd.to_datetime`` raises): gold equals the gold of the same
+        payload without that record, in observed and requested ranges."""
+        good = [
+            {"date": "2024-01-01T00:00:00", "datatype": "TMAX", "value": 10.0},
+            {"date": "2024-01-01T00:00:00", "datatype": "TMIN", "value": 0.0},
+            {"date": "2024-01-03T00:00:00", "datatype": "TMAX", "value": 30.0},
+            {"date": "2024-01-03T00:00:00", "datatype": "TMIN", "value": 10.0},
+        ]
+        bogus = {"date": "bogus", "datatype": "TMAX", "value": 99.0}
+        energy = {
+            "response": {
+                "total": 2,
+                "data": [
+                    {"period": "2024-01-01T00", "value": "100"},
+                    {"period": "2024-01-03T00", "value": "50"},
+                ],
+            }
+        }
+
+        def gold(x_results, sub, start, end):
+            d = tmp_path / f"{sub}-{start}"
+            d.mkdir()
+            weather = {"X": {"results": x_results}, "Y": {"results": good}}
+            return sorted(
+                map(
+                    tuple,
+                    build_fact(
+                        process_weather(_noaa(spark, d, weather), start, end),
+                        process_energy(_eia(spark, d, {"X": energy, "Y": energy}), start, end),
+                    ).collect(),
+                )
+            )
+
+        for start, end in ((None, None), ("2024-01-01", "2024-01-04")):
+            want = gold(good, "without", start, end)
+            assert len(want) == (6 if start is None else 8)
+            assert gold(good[:2] + [bogus] + good[2:], "with", start, end) == want
+
 
 class TestEnergyPipeline:
     def test_resample_zero_vs_null(self, spark, tmp_path):

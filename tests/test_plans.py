@@ -297,12 +297,12 @@ def _unpartitioned_windows(df) -> int:
 def test_global_order_queries_have_no_unpartitioned_window(spark, sf_dir, name):
     """The four global-order statistics must never contain a
     single-partition global sort (WindowExec: No Partition Defined — the
-    100 TB straggler). Below the small gate the r5 plans carry NO window
+    100 TB straggler). Below the small gate the plans carry NO window
     at all (literal-boundary NTILE / driver-side scalar); above it every
     window is partitioned by the range-bin id. Both shapes satisfy the
     zero-unpartitioned-windows invariant asserted here; the distributed
-    path's partitioned window is covered by tests/test_rank.py's
-    gate=0 parametrizations."""
+    path's values are checked in tests/test_rank.py (every
+    global_order_stats test, and multi_global_ntile at gate=0)."""
     df = REGISTRY[name].spark_fn(spark, sf_dir)
     assert _unpartitioned_windows(df) == 0
 
@@ -624,3 +624,26 @@ def test_gold_write_job_count(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert SparkAccount(spark).read(group)["jobs"] <= 11
+
+
+@pytest.mark.parametrize("name, budget", [("ntile_deciles", 2), ("rfm_segments", 3)])
+def test_ranked_query_build_job_count(spark, sf_dir, name, budget):
+    """Building a ranked NTILE query runs only the jobs of the
+    literal-boundary path: the bounded key collect (over rfm_segments'
+    aggregate, AQE runs its shuffle stages as two more jobs) and, when
+    orders is read for the first time, the parquet read's own job.
+    Falling to the distributed path would add the approxQuantile probe
+    and the bin-count job."""
+    from perfbench.spans import SparkAccount
+
+    from us_weather_energy_analysis_pipeline_spark.operators.cache import release_all
+
+    sc = spark.sparkContext
+    group = f"build-jobs-{name}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        REGISTRY[name].spark_fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_all()
+    assert SparkAccount(spark).read(group)["jobs"] <= budget

@@ -83,8 +83,8 @@ def test_multi_ntile_matches_builtin(spark):
             "id", F.ntile(4).over(wa).alias("ta"), F.ntile(4).over(wb).alias("tb")
         ).collect()
     }
-    # gate=0 forces the distributed stacked-agg path; the default gate
-    # takes the bounded key-collect path — both must match the builtin
+    # gate=0 forces the distributed stacked-agg path; the large gate
+    # takes the literal-boundary path — both must match the builtin
     for gate in (0, 10**6):
         got = multi_global_ntile(
             df,
@@ -131,9 +131,7 @@ def test_rank_property_random_distributions(spark):
     for vals in distributions:
         df = _df(spark, vals)
         for ascending in (True, False):
-            for nb, gate in ((2, 0), (7, 0), (2, 10**6), (7, 10**6)):
-                # gate=0 forces the distributed approxQuantile+agg path;
-                # the large gate exercises the bounded key-collect path
+            for nb in (2, 7):
                 got = global_order_stats(
                     df,
                     "v",
@@ -142,7 +140,6 @@ def test_rank_property_random_distributions(spark):
                     cum_cols=("v",),
                     num_bins=nb,
                     persist=False,
-                    small_threshold=gate,
                 )
                 order = F.col("v").asc() if ascending else F.col("v").desc()
                 w = Window.orderBy(order, F.col("id").asc())
@@ -157,15 +154,13 @@ def test_rank_property_random_distributions(spark):
                     r["id"]: (r["global_rn"], r["v_cum"]) for r in got.collect()
                 }
                 exp_m = {r["id"]: (r["rn"], r["cs"]) for r in exp.collect()}
-                assert got_m == exp_m, (vals[:5], ascending, nb, gate)
+                assert got_m == exp_m, (vals[:5], ascending, nb)
 
 
 def test_null_keys_rank_like_window(spark):
     """Null sort keys route to the dedicated sentinel bin: ASC → first
     (Spark/SQL NULLS FIRST), DESC → last — exactly the window's
-    placement, ranked among themselves by the tiebreaks. Checked on both
-    the bounded-collect and the forced distributed path (VERDICT r4
-    item 6)."""
+    placement, ranked among themselves by the tiebreaks."""
     rows = [(0, 5), (1, None), (2, 3), (3, None), (4, 9), (5, 3), (6, None)]
     df = spark.createDataFrame(rows, "id long, v long")
     for ascending in (True, False):
@@ -175,20 +170,10 @@ def test_null_keys_rank_like_window(spark):
             r["id"]: r["rn"]
             for r in df.select("id", F.row_number().over(w).alias("rn")).collect()
         }
-        for gate in (0, 10**6):
-            got = global_order_stats(
-                df,
-                "v",
-                ascending=ascending,
-                tiebreaks=("id",),
-                num_bins=3,
-                persist=False,
-                small_threshold=gate,
-            )
-            assert {r["id"]: r["global_rn"] for r in got.collect()} == exp, (
-                ascending,
-                gate,
-            )
+        got = global_order_stats(
+            df, "v", ascending=ascending, tiebreaks=("id",), num_bins=3, persist=False
+        )
+        assert {r["id"]: r["global_rn"] for r in got.collect()} == exp, ascending
 
 
 def test_null_keys_ntile_like_window(spark):
@@ -199,6 +184,8 @@ def test_null_keys_ntile_like_window(spark):
         r["id"]: r["t"]
         for r in df.select("id", F.ntile(3).over(w).alias("t")).collect()
     }
+    # gate=0 goes straight to the distributed path; under the large gate
+    # the literal path sees the null keys and bails to it
     for gate in (0, 10**6):
         got = multi_global_ntile(
             df,
@@ -213,24 +200,20 @@ def test_null_keys_ntile_like_window(spark):
 
 def test_cum_null_raises_on_both_paths(spark):
     """The exact-integer-cumsum contract fails loudly on NULL cum values
-    on BOTH the small and the distributed path (ADVICE r4: the old
-    distributed path silently null-skipped)."""
+    instead of letting sum() skip them."""
     rows = [(0, 1, 10), (1, 2, None), (2, 3, 30)]
     df = spark.createDataFrame(rows, "id long, v long, c long")
-    for gate in (0, 10**6):
-        with pytest.raises(TypeError, match="NULL"):
-            global_order_stats(
-                df, "v", tiebreaks=("id",), cum_cols=("c",),
-                persist=False, small_threshold=gate,
-            ).collect()
+    with pytest.raises(TypeError, match="NULL"):
+        global_order_stats(
+            df, "v", tiebreaks=("id",), cum_cols=("c",), persist=False
+        ).collect()
 
 
 def test_nan_keys_rank_like_window_on_both_paths(spark):
     """ADVICE r5: a genuine NaN key is NOT a NULL — Spark's nan-safe
     compare orders NaN above every finite value (asc: NULLs first, then
-    finite, then NaN). The bounded-collect path must place NaN in the
-    last real bin exactly like the distributed _pid_expr, not conflate
-    it with the NULL sentinel."""
+    finite, then NaN). _pid_expr must place NaN in the last real bin,
+    not conflate it with the NULL sentinel."""
     rows = [
         (0, 5.0),
         (1, None),
@@ -246,13 +229,5 @@ def test_nan_keys_rank_like_window_on_both_paths(spark):
         r["id"]: r["rn"]
         for r in df.select("id", F.row_number().over(w).alias("rn")).collect()
     }
-    for gate in (0, 10**6):
-        got = global_order_stats(
-            df,
-            "v",
-            tiebreaks=("id",),
-            num_bins=3,
-            persist=False,
-            small_threshold=gate,
-        )
-        assert {r["id"]: r["global_rn"] for r in got.collect()} == exp, gate
+    got = global_order_stats(df, "v", tiebreaks=("id",), num_bins=3, persist=False)
+    assert {r["id"]: r["global_rn"] for r in got.collect()} == exp

@@ -28,6 +28,7 @@ from us_weather_energy_analysis_pipeline_spark.functions.text import ascii_lower
 
 from us_weather_energy_analysis_pipeline_spark.corpus._util import dround_sql, r2, r4, r6
 from us_weather_energy_analysis_pipeline_spark.corpus.registry import load, register
+from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import small_keys_frame
 from us_weather_energy_analysis_pipeline_spark.operators.rank import (
     global_order_stats,
     multi_global_ntile,
@@ -85,10 +86,6 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted cumulative sum, so one bounded keys collect + an exact int64
     # numpy cumsum replaces the whole range-binned rank pipeline — the
     # long→double threshold comparison replicates the JVM cast exactly.
-    from us_weather_energy_analysis_pipeline_spark.operators.rank import (
-        small_keys_frame,
-    )
-
     pdf = small_keys_frame(cents, ["revenue", "l_partkey", "rev_cents"])
     if pdf is not None:
         import numpy as np
@@ -217,9 +214,6 @@ def gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Σ i·xᵢ summation order differs from the distributed partial sums,
     # which the 6-dp round absorbs — same accepted reaggregation risk).
     from us_weather_energy_analysis_pipeline_spark.corpus._util import py_dround
-    from us_weather_energy_analysis_pipeline_spark.operators.rank import (
-        small_keys_frame,
-    )
 
     pdf = small_keys_frame(rev, ["revenue", "o_custkey"])
     if pdf is not None:

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import small_keys_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -36,34 +38,22 @@ def connected_components(
     ≤ diameter iterations of join + min-aggregate (bounded by
     ``max_iter``; raises if not converged — at that scale, raise the
     bound or move to star-contraction rather than silently stopping).
-
-    Gate shape (r6, VERDICT task 3 — one job instead of count+collect):
-    the persisted edges are collected through a JVM-side PER-PARTITION
-    limit after a coalesce(8) (monotonically_increasing_id's low 33 bits
-    are the in-partition index, so a codegen filter keeps ≤ threshold+1
-    rows per coalesced partition — no CollectLimit, whose incremental
-    partition waves re-ran the expensive refine stage 3-4×, and no
-    Python stage; the cache still fills at the persisted plan's own
-    parallelism during this job). If nothing was truncated (≤ threshold
-    rows came back) they ARE the complete edge list → union-find; a
-    truncated partition proves > threshold total → the distributed path
-    reads the same persisted edges, already materialized. Worst-case
-    driver transfer is 8 × (threshold+1) rows (~tens of MB), paid only
-    in the rare over-threshold case. (A .rdd.getNumPartitions probe was
-    measured to schedule AQE materialization jobs of its own — avoid.)
+    The gate and the collect are one job (``plan_meta.small_keys_frame``)
+    over the persisted edges, so the distributed path reads them already
+    materialized.
     """
     spark = edges.sparkSession
     edges = edges.select(src, dst).persist()
     try:
-        capped = (
-            edges.coalesce(8)
-            .withColumn("_i", F.monotonically_increasing_id() % F.lit(1 << 33))
-            .filter(F.col("_i") < driver_threshold + 1)
-            .drop("_i")
+        pdf = small_keys_frame(
+            edges, [src, dst], gate=driver_threshold, track_on_fallback=False
         )
-        rows = capped.collect()
-        if len(rows) <= driver_threshold:
-            return _union_find_rows(spark, rows)
+        if pdf is not None:
+            # plain Python ints, not numpy scalars: union-find hashes
+            # and compares them, and local_df ships them back
+            return _union_find_rows(
+                spark, list(zip(pdf[src].tolist(), pdf[dst].tolist()))
+            )
         return _propagate(edges, src, dst, max_iter)
     finally:
         edges.unpersist()

@@ -1,4 +1,5 @@
-"""Driver-side plan metadata probes — no Spark job.
+"""Driver-side plan metadata probes — no Spark job, except the one
+capped collect of ``small_keys_frame``.
 
 ``input_bytes`` / ``input_rows`` read the scan's FileIndex and parquet
 footers (the same statistics AQE and the broadcast-join planner consult)
@@ -14,14 +15,20 @@ driver-memory bound). It also verifies the "plan rows ≤ scan rows"
 contract structurally instead of by convention: any row-expanding node
 (Join, Generate/explode, Expand, python co-group/flat-map) in the
 optimized plan fails the gate and the caller falls back to its count-gated
-or fully distributed path.
+or fully distributed path. ``small_keys_frame`` is that small path's
+one collect: job-free gate first, else one capped collect that both
+gates and fetches.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from us_weather_energy_analysis_pipeline_spark.operators import cache
 
 # Scans below this are safely driver-collectable after aggregation:
 # 64 MB of columnar parquet upper-bounds the probe collect (keys + cum
@@ -29,6 +36,10 @@ from pyspark.sql import DataFrame
 # working set, let alone the driver. Above it (sf ≥ ~1 for lineitem) the
 # count-gated / fully distributed paths engage.
 SMALL_INPUT_BYTES = 64 << 20
+# Row gate of the driver-collecting small paths (``small_keys_frame``):
+# sort keys and a few integer columns at ~24 B per row per column are
+# ≈ 50 MB of driver memory at the gate.
+SMALL_KEY_THRESHOLD = 2_000_000
 
 # Plan nodes that can emit more rows than they consume, matched against
 # the NODE NAME at the start of each optimized-plan tree line (ADVICE r7:
@@ -183,3 +194,51 @@ def small_scan(
         and input_rows(df) <= max_rows
         and _plan_row_bounded(df)
     )
+
+
+def small_keys_frame(
+    df: DataFrame,
+    cols: Sequence[str],
+    gate: int = SMALL_KEY_THRESHOLD,
+    track_on_fallback: bool = True,
+    known_bounded: bool | None = None,
+):
+    """Bounded driver collect of ``cols``: when ``small_scan`` already
+    bounds the input the collect is the ONLY action (no count job);
+    otherwise ONE capped collect both gates and fetches: after a
+    ``coalesce(8)``, a codegen filter on monotonically_increasing_id's
+    low 33 bits (the in-partition index) keeps at most ``gate + 1`` rows
+    per coalesced partition — no CollectLimit, whose incremental
+    partition waves re-run expensive upstreams — so the worst-case
+    driver transfer is 8 × (gate + 1) rows. If more than ``gate`` rows
+    come back, some partition was truncated or the total is over: return
+    ``None`` and the caller builds its distributed plan; otherwise the
+    rows ARE the complete frame. The input is persisted
+    (``track_on_fallback``) so the collect doubles as the cache fill for
+    whichever path follows; callers that persist it themselves pass
+    False. ``known_bounded`` is a ``small_scan`` verdict the caller
+    took on the plan before persisting it (a cached plan's
+    InMemoryRelation leaf always fails the gate).
+    Returns a pandas DataFrame, or ``None`` above the gate."""
+    bounded = (
+        known_bounded
+        if known_bounded is not None
+        else small_scan(df, max_rows=gate)
+    )
+    if bounded:
+        return df.select(*cols).toPandas()
+    if track_on_fallback:
+        df = cache.track(df)
+    pdf = (
+        df.select(*cols)
+        .coalesce(8)
+        .withColumn(
+            "_skf_i", F.monotonically_increasing_id() % F.lit(1 << 33)
+        )
+        .filter(F.col("_skf_i") < gate + 1)
+        .drop("_skf_i")
+        .toPandas()
+    )
+    if len(pdf) > gate:
+        return None
+    return pdf

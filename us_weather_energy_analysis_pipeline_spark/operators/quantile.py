@@ -47,8 +47,8 @@ def exact_quantiles(
     small_threshold: int = SMALL_THRESHOLD,
 ) -> DataFrame:
     """Exact linear-interpolation quantiles of ``value_col``, computed
-    adaptively (built-in ``percentile`` below ``small_threshold`` values,
-    distributed rank otherwise). Returns one row per fraction:
+    adaptively (a driver-side numpy collect below ``small_threshold``
+    values, distributed rank otherwise). Returns one row per fraction:
     (f double, q double).
 
     Interpolation matches DuckDB quantile_cont / Spark percentile:

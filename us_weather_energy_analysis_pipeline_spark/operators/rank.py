@@ -27,14 +27,22 @@ rounded decimals to integer cents) so the bin-parallel partial sums are
 exactly associative — bit-identical to a sequential scan, no float
 reordering hazard.
 
-Cost model per call, adaptive like ``operators/quantile.py``: below
-``SMALL_KEY_THRESHOLD`` rows, ONE bounded driver action (a limit-probe
-Arrow collect of the sort keys + cum columns only) yields exact cuts,
-counts and sums in numpy — then one fully parallel final job. Above the
-gate, two driver actions (approxQuantile boundary probe + bounded bin
-stats, both over the persisted keyed input) replace it. The input here
-is typically a small aggregate of a huge fact table (group totals,
-per-doc stats) — exactly what a production job persists.
+Each operator has one small path and one distributed path:
+
+- small (NTILE only, ``multi_global_ntile``): below
+  ``SMALL_KEY_THRESHOLD`` rows, ONE bounded driver collect of the sort
+  keys and tiebreaks (``plan_meta.small_keys_frame``) yields each
+  bucket's last row, and the bucket becomes a literal row-local
+  comparison — no window, no shuffle. Null or NaN keys, non-numeric
+  tiebreaks or a duplicate tuple at a bucket edge send it to the
+  distributed path. ``global_order_stats`` has no small path of its
+  own: its corpus callers (Pareto, Gini) answer small inputs on the
+  driver from the same collect before calling it.
+- distributed: two driver actions over the persisted keyed input, the
+  approxQuantile boundary probe and the bounded bin-stats job, then one
+  fully parallel final job. The input here is typically a small
+  aggregate of a huge fact table (group totals, per-doc stats) —
+  exactly what a production job persists.
 
 Reference parity: the reference has no distribution profiler at all
 (``src/analysis.py:6-67`` stops at mean/median/OLS); these are the
@@ -50,22 +58,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.operators import cache
+from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
+    SMALL_KEY_THRESHOLD,
+    small_keys_frame,
+    small_scan,
+)
 
 DEFAULT_BINS = 32
-# Below this many rows the bin boundaries AND the per-bin stats come from
-# ONE bounded driver collect of the SORT KEYS ONLY (+ cum columns): ~24 B
-# per row per column, ≈ 50 MB at the gate — the same adaptive principle
-# as operators/quantile.py. Above it, the distributed two-action path
-# (approxQuantile probe + bin-stats job) runs — the only shape that
-# survives 100 TB.
-SMALL_KEY_THRESHOLD = 2_000_000
 _APPROX_EPS = 0.01  # bins only need rough balance; 0.001 measurably slower
-
-# Persisted inputs outlive the call on purpose: the returned plan still
-# reads them lazily, so eager unpersist here would force a recompute in
-# the caller's final action. Loop drivers (bench, oracle sweeps, test
-# fixtures) release via operators.cache.release_all between queries.
-release_persisted = cache.release_all  # back-compat alias
 
 
 @dataclass
@@ -130,187 +130,6 @@ def _lookup(values: list[int], pid_col: str) -> Column:
     return F.expr(f"element_at(array({arr}), {pid_col} + 1)")
 
 
-def _try_small_stats(
-    base: DataFrame,
-    sk_names: Sequence[str],
-    cum_cols: Sequence[str],
-    nb: int,
-    gate: int = SMALL_KEY_THRESHOLD,
-    null_first: Sequence[bool] | None = None,
-    known_bounded: bool | None = None,
-):
-    """Bounded small path: count-gate, then a PARALLEL Arrow collect of
-    ONLY the sort keys (+ cum columns), deriving exact cuts, per-bin
-    counts and per-bin sums in numpy/pandas. Returns ``None`` when the
-    input exceeds the gate (caller falls back to the distributed
-    probe+agg path); the count then still served as the persist fill.
-    The gate is a count(), not a ``limit(gate+1)`` probe: CollectLimit
-    funnels every row through a single-task GlobalLimit before
-    serializing (measured ~1.5× the count+parallel-collect pair on 600k
-    rows), and on the persisted input the count is a cache-fill scan.
-    The count job itself is SKIPPED when ``plan_meta.small_scan`` already
-    bounds the input: file bytes under the gate AND parquet footer rows
-    under ``gate`` AND no row-expanding plan node (the "plan rows ≤ scan
-    rows" contract checked structurally, not by convention). At the
-    corpus SFs that saves one full job per ranked query; when the
-    metadata can't prove the bound nothing changes — the count gate
-    engages. Cut literals are the collected float64 key values
-    themselves, so the JVM-side ``key > cut`` comparisons agree exactly
-    with the driver-side ``searchsorted``."""
-    import numpy as np
-
-    from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
-        small_scan,
-    )
-
-    # ``known_bounded``: callers that persist their input probe the gate
-    # on the PRE-persist plan and pass the verdict down — the persisted
-    # plan's InMemoryRelation leaf always fails small_scan (its footer
-    # contract can't see through the cache), which silently cost a count
-    # job per ranked query (r8, VERDICT task 5).
-    bounded = (
-        known_bounded
-        if known_bounded is not None
-        else small_scan(base, max_rows=gate)
-    )
-    if not bounded and base.count() > gate:
-        return None
-    cols = list(sk_names) + [c for c in cum_cols if c not in sk_names]
-    # Per-key JVM-side null indicators: toPandas renders both NULL and a
-    # genuine NaN key as float64 NaN, but the distributed _pid_expr
-    # treats them differently (NULL → sentinel bin; NaN is non-null and
-    # Spark's nan-safe compare orders it above every value → last real
-    # bin). Collect `IS NULL` computed on the JVM so the small path can
-    # split the two and bin identically (ADVICE r5).
-    sel = [F.col(c) for c in cols] + [
-        F.isnull(sk).alias(f"__isnull_{si}") for si, sk in enumerate(sk_names)
-    ]
-    pdf = base.select(*sel).toPandas()
-    out = []
-    for si, sk in enumerate(sk_names):
-        keys = pdf[sk].to_numpy(dtype="float64")
-        nf = True if null_first is None else bool(null_first[si])
-        nullm = pdf[f"__isnull_{si}"].to_numpy(dtype=bool)
-        nanm = np.isnan(keys) & ~nullm  # true NaN keys, not NULLs
-        nn = keys[~nullm & ~nanm]
-        n = len(nn)
-        srt = np.sort(nn)
-        cuts = (
-            sorted({float(srt[min(n - 1, (i * n) // nb)]) for i in range(1, nb)})
-            if n
-            else []
-        )
-        null_pid = 0 if nf else len(cuts) + 2
-        # pid = 1 + #cuts strictly below key ⟺ _pid_expr's CASE branch;
-        # NaN > every cut under Spark's nan-safe compare → last real bin
-        pid = np.where(
-            nullm,
-            null_pid,
-            np.where(
-                nanm,
-                1 + len(cuts),
-                1
-                + np.searchsorted(
-                    np.asarray(cuts, dtype="float64"),
-                    np.nan_to_num(keys, nan=0.0),
-                    side="left",
-                ),
-            ),
-        )
-        n_pids = len(cuts) + 3
-        cnts = np.bincount(pid, minlength=n_pids) if len(keys) else np.zeros(n_pids, int)
-        col_sums = {}
-        for c in cum_cols:
-            # int64 accumulation via add.at — exact, no float reordering.
-            # The column must already BE integer-typed (the documented
-            # contract: callers pre-scale to integer cents); a float
-            # column would silently produce path-dependent results
-            # (per-element truncation here vs post-sum truncation on the
-            # distributed path), so violations fail loudly instead.
-            if pdf[c].isna().any():
-                # a NULL would silently float-promote the column (pandas
-                # nullable int64 → float64) and poison the exact int64
-                # accumulation; the distributed path's sum() would skip
-                # it silently instead — fail loudly and consistently
-                raise TypeError(
-                    f"cum column {c!r} contains NULLs; the exact integer "
-                    "cumsum contract requires non-null values — coalesce "
-                    "before calling"
-                )
-            vals = pdf[c].to_numpy()
-            if not np.issubdtype(vals.dtype, np.integer):
-                raise TypeError(
-                    f"cum column {c!r} must be integer-typed (got "
-                    f"{vals.dtype}); pre-scale to integer units"
-                )
-            s = np.zeros(n_pids, dtype=np.int64)
-            np.add.at(s, pid, vals.astype(np.int64))
-            col_sums[c] = s
-        rows = [
-            {
-                "_pid": p,
-                "_cnt": int(cnts[p]),
-                **{f"_s_{c}": int(col_sums[c][p]) for c in cum_cols},
-            }
-            for p in range(n_pids)
-            if cnts[p]
-        ]
-        out.append((cuts, _BinStats(n_pids, rows, cum_cols)))
-    return out
-
-
-def small_keys_frame(
-    df: DataFrame,
-    cols: Sequence[str],
-    gate: int = SMALL_KEY_THRESHOLD,
-    track_on_fallback: bool = True,
-    known_bounded: bool | None = None,
-):
-    """Bounded driver collect of ``cols`` for quantile.py-style small
-    paths: when ``plan_meta.small_scan`` already bounds the input (file
-    bytes AND parquet footer rows AND no row-expanding plan node) the
-    collect is the ONLY action (no count job, no persist); otherwise ONE
-    capped collect both gates and fetches (r9 job cut — previously a
-    count() job preceded the collect job): after a ``coalesce(8)``, a
-    codegen filter on monotonically_increasing_id's low 33 bits (the
-    in-partition index) keeps at most ``gate + 1`` rows per coalesced
-    partition — no CollectLimit (whose incremental partition waves re-run
-    expensive upstreams, see components.py), worst-case driver transfer
-    8 × (gate + 1) rows. If more than ``gate`` rows come back, some
-    partition was truncated or the total is over — return ``None`` and
-    the caller builds its distributed plan; otherwise the rows ARE the
-    complete frame (a truncated partition alone implies > gate). The
-    input is persisted (``track_on_fallback``) so the collect doubles as
-    the cache fill for whichever path follows.
-    Returns a pandas DataFrame, or ``None`` above the gate."""
-    from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
-        small_scan,
-    )
-
-    bounded = (
-        known_bounded
-        if known_bounded is not None
-        else small_scan(df, max_rows=gate)
-    )
-    if bounded:
-        return df.select(*cols).toPandas()
-    if track_on_fallback:
-        df = cache.track(df)
-    pdf = (
-        df.select(*cols)
-        .coalesce(8)
-        .withColumn(
-            "_skf_i", F.monotonically_increasing_id() % F.lit(1 << 33)
-        )
-        .filter(F.col("_skf_i") < gate + 1)
-        .drop("_skf_i")
-        .toPandas()
-    )
-    if len(pdf) > gate:
-        return None
-    return pdf
-
-
 def _lex_gt_sql(
     names: Sequence[str], literals: Sequence[str]
 ) -> str:
@@ -361,8 +180,8 @@ def _try_small_ntile_exprs(
     successor (duplicates would straddle the bucket edge, where NTILE
     splits them but ``>`` cannot); tiebreaks are unique row keys in
     every corpus caller, and the adjacent-duplicate check below bails to
-    the pid-window path otherwise — as it does for null/non-numeric
-    tiebreaks or null keys. Returns one Column per spec, or None."""
+    the distributed path otherwise — as it does for null/non-numeric
+    tiebreaks or null/NaN keys. Returns one Column per spec, or None."""
     import numpy as np
 
     need: list[str] = [f"_sk{i}" for i in range(len(specs))]
@@ -491,69 +310,45 @@ def global_order_stats(
     n_col: str | None = None,
     totals: bool = False,
     persist: bool = True,
-    small_threshold: int = SMALL_KEY_THRESHOLD,
 ) -> DataFrame:
     """Append the exact global 1-based ``rank_col`` (ordered by ``key``
     in the given direction, then ``tiebreaks`` ascending) and, for each
-    ``c`` in ``cum_cols`` (must be integer-typed), an exact running sum
-    ``{c}_cum`` including the current row. ``n_col`` names an optional
-    total-row-count column; ``totals=True`` adds ``{c}_tot`` grand-total
-    columns — all literals (known driver-side from the bounded bin
-    stats), zero extra plan cost."""
+    ``c`` in ``cum_cols`` (must be integer-typed, non-null), an exact
+    running sum ``{c}_cum`` including the current row. ``n_col`` names
+    an optional total-row-count column; ``totals=True`` adds ``{c}_tot``
+    grand-total columns — all literals (known driver-side from the
+    bounded bin stats), zero extra plan cost. ``persist`` keeps the keyed
+    input cached past the call (the returned plan still reads it; loop
+    drivers release it through ``operators.cache.release_all``)."""
     spec = OrderSpec(key, ascending, tuple(tiebreaks), cum_cols=tuple(cum_cols))
     base = df.withColumn("_sk0", spec.sort_key())
-    # probe the gate BEFORE persisting: the persisted plan's
-    # InMemoryRelation leaf always fails small_scan (see _try_small_stats)
-    from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
-        small_scan,
-    )
-
-    bounded = small_scan(base, max_rows=small_threshold)
     if persist:
         base = cache.track(base)
     nb = max(2, num_bins)
-    small = _try_small_stats(
-        base,
-        ["_sk0"],
-        cum_cols,
-        nb,
-        gate=small_threshold,
-        null_first=[spec.ascending],
-        known_bounded=bounded,
+    cuts = base.stat.approxQuantile(
+        "_sk0", [i / nb for i in range(1, nb)], _APPROX_EPS
     )
-    if small is not None:
-        cuts, stats = small[0]
-    else:
-        cuts = base.stat.approxQuantile(
-            "_sk0", [i / nb for i in range(1, nb)], _APPROX_EPS
+    aggs = [F.count(F.lit(1)).alias("_cnt")] + [
+        x
+        for c in cum_cols
+        for x in (
+            F.sum(F.col(c)).cast("long").alias(f"_s_{c}"),
+            F.count(F.col(c)).alias(f"_nn_{c}"),
         )
-        binned_probe = base.withColumn(
-            "_pid0", _pid_expr("_sk0", cuts, spec.ascending)
-        )
-        aggs = [F.count(F.lit(1)).alias("_cnt")] + [
-            x
-            for c in cum_cols
-            for x in (
-                F.sum(F.col(c)).cast("long").alias(f"_s_{c}"),
-                F.count(F.col(c)).alias(f"_nn_{c}"),
-            )
-        ]
-        rows = (
-            binned_probe.groupBy(F.col("_pid0").alias("_pid")).agg(*aggs).collect()
-        )
-        # same loud contract as the small path (ADVICE r4): a NULL cum
-        # value would be silently skipped by sum(), making the running
-        # sums path-dependent — fail identically on both paths
-        for r in rows:
-            for c in cum_cols:
-                if r[f"_nn_{c}"] != r["_cnt"]:
-                    raise TypeError(
-                        f"cum column {c!r} contains NULLs; the exact "
-                        "integer cumsum contract requires non-null values"
-                        " — coalesce before calling"
-                    )
-        stats = _BinStats(_n_pids(cuts), rows, cum_cols)
+    ]
     binned = base.withColumn("_pid0", _pid_expr("_sk0", cuts, spec.ascending))
+    rows = binned.groupBy(F.col("_pid0").alias("_pid")).agg(*aggs).collect()
+    # a NULL cum value would be silently skipped by sum(), making the
+    # running sums wrong — fail loudly instead
+    for r in rows:
+        for c in cum_cols:
+            if r[f"_nn_{c}"] != r["_cnt"]:
+                raise TypeError(
+                    f"cum column {c!r} contains NULLs; the exact "
+                    "integer cumsum contract requires non-null values"
+                    " — coalesce before calling"
+                )
+    stats = _BinStats(_n_pids(cuts), rows, cum_cols)
     out = _attach_rank(binned, 0, spec, stats, rank_col)
     if n_col:
         out = out.withColumn(n_col, F.lit(stats.n).cast("long"))
@@ -597,83 +392,55 @@ def multi_global_ntile(
     small_threshold: int = SMALL_KEY_THRESHOLD,
 ) -> DataFrame:
     """Exact ``NTILE(k)`` for SEVERAL global orderings over the same
-    frame (the RFM shape: recency/frequency/monetary quartiles) with TWO
-    driver actions total: all sort keys are probed in a single
-    multi-column ``approxQuantile`` pass, the per-ordering bin counts are
-    STACKED into one aggregation job, and the rank plumbing (literal
-    offsets + partitioned windows) composes lazily into one final plan."""
+    frame (the RFM shape: recency/frequency/monetary quartiles). Below
+    ``small_threshold`` rows, one bounded key collect turns every
+    ordering into a literal bucket comparison (``_try_small_ntile_exprs``).
+    Otherwise, or when that path bails, TWO driver actions total: all
+    sort keys are probed in a single multi-column ``approxQuantile``
+    pass, the per-ordering bin counts are STACKED into one aggregation
+    job, and the rank plumbing (literal offsets + partitioned windows)
+    composes lazily into one final plan."""
     # one Py4J analysis round for all sort keys, not one per spec
     base = df.withColumns({f"_sk{i}": s.sort_key() for i, s in enumerate(specs)})
     # probe the gate BEFORE persisting: the persisted plan's
-    # InMemoryRelation leaf always fails small_scan (see _try_small_stats)
-    from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
-        small_scan,
-    )
-
+    # InMemoryRelation leaf always fails small_scan
     bounded = small_scan(base, max_rows=small_threshold)
     if persist:
         base = cache.track(base)
-    nb = max(2, num_bins)
     sk_names = [f"_sk{i}" for i in range(len(specs))]
-    # Small path v2: literal bucket-boundary comparison — no pid windows,
-    # no per-ordering shuffle (the dominant job count of this shape).
-    # Bails (rarely: duplicate boundary tuples, null/non-numeric keys)
-    # to the pid-window small path below, which re-collects.
+    # literal bucket-boundary comparison — no pid windows, no
+    # per-ordering shuffle (the dominant job count of this shape)
     lit_exprs = _try_small_ntile_exprs(
-        base, specs, k, gate=small_threshold,
-        known_bounded=bounded,
+        base, specs, k, gate=small_threshold, known_bounded=bounded
     )
     if lit_exprs is not None:
         return base.withColumns(
             {spec.out_col: ex for spec, ex in zip(specs, lit_exprs)}
         ).drop(*sk_names)
-    small = _try_small_stats(
-        base,
-        sk_names,
-        (),
-        nb,
-        gate=small_threshold,
-        null_first=[s.ascending for s in specs],
-        known_bounded=bounded,
+    nb = max(2, num_bins)
+    all_cuts = base.stat.approxQuantile(
+        sk_names, [i / nb for i in range(1, nb)], _APPROX_EPS
     )
-    if small is not None:
-        per_ordering = small
-    else:
-        all_cuts = base.stat.approxQuantile(
-            sk_names, [i / nb for i in range(1, nb)], _APPROX_EPS
-        )
-        binned_probe = base
-        n_pids = []
-        for i, cuts in enumerate(all_cuts):
-            binned_probe = binned_probe.withColumn(
-                f"_pid{i}", _pid_expr(f"_sk{i}", cuts, specs[i].ascending)
+    out = base.withColumns(
+        {
+            f"_pid{i}": _pid_expr(f"_sk{i}", cuts, specs[i].ascending)
+            for i, cuts in enumerate(all_cuts)
+        }
+    )
+    # one job for ALL orderings' bin counts: stack (ordering, pid) pairs
+    stacked = out.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(i).alias("_w"), F.col(f"_pid{i}").alias("_pid"))
+                    for i in range(len(specs))
+                ]
             )
-            n_pids.append(_n_pids(cuts))
-        # one job for ALL orderings' bin counts: stack (ordering, pid) pairs
-        stacked = binned_probe.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("_w"), F.col(f"_pid{i}").alias("_pid")
-                        )
-                        for i in range(len(specs))
-                    ]
-                )
-            ).alias("s")
-        ).select("s._w", "s._pid")
-        rows = stacked.groupBy("_w", "_pid").agg(
-            F.count(F.lit(1)).alias("_cnt")
-        ).collect()
-        per_ordering = [
-            (all_cuts[i], _BinStats(n_pids[i], [r for r in rows if r["_w"] == i], ()))
-            for i in range(len(specs))
-        ]
-    out = base
-    for i, (cuts, _) in enumerate(per_ordering):
-        out = out.withColumn(f"_pid{i}", _pid_expr(f"_sk{i}", cuts, specs[i].ascending))
+        ).alias("s")
+    ).select("s._w", "s._pid")
+    rows = stacked.groupBy("_w", "_pid").agg(F.count(F.lit(1)).alias("_cnt")).collect()
     for i, s in enumerate(specs):
-        stats = per_ordering[i][1]
+        stats = _BinStats(_n_pids(all_cuts[i]), [r for r in rows if r["_w"] == i], ())
         out = _attach_rank(out, i, s, stats, f"_gr{i}")
         out = out.withColumn(
             s.out_col, _ntile_from_rank(F.col(f"_gr{i}"), stats.n, k)

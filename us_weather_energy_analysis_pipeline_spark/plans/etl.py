@@ -58,12 +58,13 @@ def process_weather(
     one row per (date, city) with temp_max_f/temp_min_f/temp_avg_f
     (reference `process_weather_data` data_processor.py:24-62).
 
-    Steps: truncate date (P2) → convert °C→°F BEFORE pivot (P1) → EAV
+    Steps: truncate date (P2; a malformed date reads as NULL and, like a
+    missing one, never matches the spine) → convert °C→°F BEFORE pivot (P1) → EAV
     pivot as one conditional aggregate, mean dedup (A1) → spine-join to the
     requested range (J4) → per-city mean imputation (N1) → row avg (P7).
     """
     obs = long_obs.select(
-        F.to_date(F.substring_index("date_str", "T", 1)).alias("date"),
+        F.try_to_date(F.substring_index("date_str", "T", 1)).alias("date"),
         "city",
         "datatype",
         celsius_to_fahrenheit("value_c").alias("value_f"),
