@@ -99,9 +99,10 @@ SHOWCASE = {
         "from parquet metadata, job-free) selects the single-block fast "
         "path shown: ONE FlatMapGroupsInPandas does the in-group matmul "
         "prune + exact fold re-score — no driver collect. Above "
-        "block_rows the same call builds the distributed block-pair "
-        "filter-refine (pack blocks, equi-join pair keys, numpy prune, "
-        "exact re-score; plan pinned by the block_rows-forced tests)."
+        "BLOCK_ROWS (8192) rows the same call builds the distributed "
+        "block-pair filter-refine (pack blocks, equi-join pair keys, numpy "
+        "prune, exact re-score; plan pinned by the tests that lower "
+        "BLOCK_ROWS)."
     ),
     "distinct_kmv_estimate": (
         "KMV sketch: TakeOrderedAndProject keeps the k smallest hashes with "

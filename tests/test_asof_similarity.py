@@ -86,21 +86,23 @@ def test_lsh_bucket_determinism(emb):
     assert all(0 <= r["b"] < 64 for r in codes)
 
 
-def test_cosine_pairs_blocked_matches_brute_force(emb):
+def test_cosine_pairs_blocked_matches_brute_force(emb, monkeypatch):
     """The block-pair filter-refine must return the exact all-pairs result
-    regardless of block count — force several hash blocks (block_rows=7 on
+    regardless of block count — force several hash blocks (BLOCK_ROWS=7 on
     a ~60-row slice) so the i==j upper-triangle path AND the i<j
     min/max-normalization path are both exercised."""
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         cosine,
         cosine_pairs_filter_refine,
     )
 
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 7)
     sub = emb.filter(F.col("vec_id") < 60).select("vec_id", "embedding")
     thr = 0.2
     got = {
         (r["id_a"], r["id_b"]): round(r["cosine"], 9)
-        for r in cosine_pairs_filter_refine(sub, thr, block_rows=7).collect()
+        for r in cosine_pairs_filter_refine(sub, thr).collect()
     }
     a = sub.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     b = sub.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
@@ -115,17 +117,19 @@ def test_cosine_pairs_blocked_matches_brute_force(emb):
     assert got == want and len(want) > 0
 
 
-def test_grouped_pairs_pathological_bucket(emb):
+def test_grouped_pairs_pathological_bucket(emb, monkeypatch):
     """Skew fixture: EVERY vector lands in one giant LSH bucket (constant
-    group) with block_rows far below the bucket size — the pathological
+    group) with BLOCK_ROWS far below the bucket size — the pathological
     case the e2e embedding pipeline must survive without a single-task
     OOM. The bounded block-pair walk must still produce exactly the
     brute-force candidate set, and a second group must stay isolated
     (no cross-bucket pairs)."""
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         grouped_candidate_pairs,
     )
 
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 6)
     # group 7: ids 0..39 (the giant bucket); group 9: ids 40..49
     sub = emb.filter(F.col("vec_id") < 50).select(
         "vec_id",
@@ -135,9 +139,7 @@ def test_grouped_pairs_pathological_bucket(emb):
     thr = 0.15
     got = {
         (r["id_a"], r["id_b"])
-        for r in grouped_candidate_pairs(
-            sub, thr, "bkt", block_rows=6
-        ).collect()
+        for r in grouped_candidate_pairs(sub, thr, "bkt").collect()
     }
     rows = sub.select("vec_id", "embedding", "bkt").collect()
     import numpy as np
@@ -161,7 +163,7 @@ def test_grouped_pairs_pathological_bucket(emb):
         assert (a in g7) == (b in g7)
 
 
-def test_exact_refine_bit_identical_to_sql_fold(spark):
+def test_exact_refine_bit_identical_to_sql_fold(spark, monkeypatch):
     """The in-task exact refine (the nested sequential fold inside
     grouped_candidate_pairs) must agree BIT-FOR-BIT with the SQL
     aggregate/zip_with fold it replaces — not approximately: the
@@ -171,11 +173,13 @@ def test_exact_refine_bit_identical_to_sql_fold(spark):
     THROUGH the operator so the covered code is the code that ships."""
     import struct
 
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         cosine,
         cosine_pairs_filter_refine,
     )
 
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 2)
     vecs = [
         [1e8, 1.0, -1e8, 1e-8, 3.0, 7.0],
         [2.0, 1e8, 5.0, -1e8, 1e-7, 1.0],
@@ -188,7 +192,7 @@ def test_exact_refine_bit_identical_to_sql_fold(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): struct.pack("<d", r["cosine"])
-        for r in cosine_pairs_filter_refine(df, -1.0, block_rows=2).collect()
+        for r in cosine_pairs_filter_refine(df, -1.0).collect()
     }
     a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
@@ -203,14 +207,17 @@ def test_exact_refine_bit_identical_to_sql_fold(spark):
         assert got[k] == want[k], (k, got[k], want[k])
 
 
-def test_grouped_pairs_string_group_key(emb):
+def test_grouped_pairs_string_group_key(emb, monkeypatch):
     """A string-typed bucket column (e.g. an md5-hex digest) must work —
     the r4 regression was cast(key AS long) nulling every non-numeric
     group so the null-unsafe pair join returned zero candidates
     silently."""
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         grouped_candidate_pairs,
     )
+
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 8)
 
     sub = emb.filter(F.col("vec_id") < 30).select(
         "vec_id",
@@ -221,7 +228,7 @@ def test_grouped_pairs_string_group_key(emb):
     )
     got = {
         (r["id_a"], r["id_b"])
-        for r in grouped_candidate_pairs(sub, 0.1, "bkt", block_rows=8).collect()
+        for r in grouped_candidate_pairs(sub, 0.1, "bkt").collect()
     }
     assert len(got) > 0  # silent-empty is the regression
     # isolation still holds for string groups
@@ -229,15 +236,14 @@ def test_grouped_pairs_string_group_key(emb):
         assert (a < 20) == (b < 20)
 
 
-def test_fp32_pack_path_matches_fp64(emb):
-    """array<float> input routes the block-pair machinery through the
-    lossless float32 pack (sgemm filter + widened cut + float64 survivor
-    re-score). The result must be IDENTICAL — pair set and bit-level
-    cosines — to feeding the same values as array<double>, which takes
-    the float64 pack path. float→double casts are exact, so any
-    difference would be a bug in the fp32 slack/refine logic."""
+def test_fp32_pack_path_matches_fp64(emb, monkeypatch):
+    """array<float> input widens exactly to float64 in the block pack, so
+    the blocked verifier must return IDENTICAL results — pair set and
+    bit-level cosines — to feeding the same values as array<double>, for
+    the one-group and the grouped entry point alike."""
     import struct
 
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         cosine_pairs_filter_refine,
         grouped_candidate_pairs,
@@ -247,51 +253,21 @@ def test_fp32_pack_path_matches_fp64(emb):
     as64 = sub.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    # exact mode: bit-identical cosines required
-    got32 = {
-        (r["id_a"], r["id_b"]): struct.pack("<d", r["cosine"])
-        for r in cosine_pairs_filter_refine(sub, 0.2, block_rows=9).collect()
-    }
-    got64 = {
-        (r["id_a"], r["id_b"]): struct.pack("<d", r["cosine"])
-        for r in cosine_pairs_filter_refine(as64, 0.2, block_rows=9).collect()
-    }
-    assert got32 == got64 and len(got32) > 0
-    # candidate mode (grouped, non-exact): identical pair sets
-    g = F.pmod(F.col("vec_id"), F.lit(3)).alias("bkt")
-    c32 = {
-        (r["id_a"], r["id_b"])
-        for r in grouped_candidate_pairs(
-            sub.select("vec_id", "embedding", g), 0.15, "bkt", block_rows=7
-        ).collect()
-    }
-    c64 = {
-        (r["id_a"], r["id_b"])
-        for r in grouped_candidate_pairs(
-            as64.select("vec_id", "embedding", g), 0.15, "bkt", block_rows=7
-        ).collect()
-    }
-    # Margin contract (ADVICE r4/r5): candidates are approximate at the
-    # cut boundary — the fp32 path re-scores via einsum, the fp64 path
-    # via BLAS dgemm, whose summation orders can disagree by up to
-    # ~dim·eps relative (64 · 2⁻⁵² ≈ 1.4e-14 for these vectors). A pair
-    # may differ between the sets ONLY if its exact fold cosine sits
-    # within that bound (×100 safety slack, still ≪ the 1e-6 margin) of
-    # (threshold - margin); callers re-score exactly before acting, so
-    # such pairs are semantically interchangeable. Zero-norm rows score
-    # None and can never be boundary flips — treat any such asymmetric
-    # pair as a hard failure.
-    from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
-        fold_cosine,
-    )
 
-    vecs = {r["vec_id"]: list(r["embedding"]) for r in sub.collect()}
-    cut = 0.15 - 1e-6
-    summation_bound = 100 * 64 * 2.0**-52  # ×100 slack over dim·eps
-    for a, b in c32.symmetric_difference(c64):
-        c = fold_cosine(vecs[a], vecs[b])
-        assert c is not None and abs(c - cut) < summation_bound, (a, b, c)
-    assert len(c32) > 0 and len(c64) > 0
+    def bits(df):
+        return {
+            (r["id_a"], r["id_b"]): struct.pack("<d", r["cosine"])
+            for r in df.collect()
+        }
+
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 9)
+    got32 = bits(cosine_pairs_filter_refine(sub, 0.2))
+    assert got32 == bits(cosine_pairs_filter_refine(as64, 0.2)) and got32
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 7)
+    g = F.pmod(F.col("vec_id"), F.lit(3)).alias("bkt")
+    c32 = bits(grouped_candidate_pairs(sub.select("vec_id", "embedding", g), 0.15, "bkt"))
+    c64 = bits(grouped_candidate_pairs(as64.select("vec_id", "embedding", g), 0.15, "bkt"))
+    assert c32 == c64 and c32
 
 
 def test_asof_null_right_ts_never_matches(spark):
@@ -316,44 +292,6 @@ def test_asof_null_right_ts_never_matches(spark):
     only_null = right.filter(F.col("ts").isNull())
     rows2 = asof_join_backward(left, only_null, ["user_id"], "ts", ["value"]).collect()
     assert rows2[0]["value_asof"] is None and rows2[0]["ts_asof"] is None
-
-
-def test_centroid_vectorized_path_matches_expression_path(emb, spark):
-    """The numpy partial-agg path (above the metadata gate) must agree
-    with the small-input expression plan — same groups, means equal to
-    the 6-dp round (the two paths sum doubles in different orders; the
-    round is the documented absorption boundary)."""
-    from us_weather_energy_analysis_pipeline_spark.corpus._util import r6
-    from us_weather_energy_analysis_pipeline_spark.corpus.similarity_q import (
-        centroid_by_label_vectorized,
-    )
-
-    sq_norm = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    expr = {
-        r["label"]: (r["n"], r["dim0_mean"], r["dim1_mean"], r["mean_sq_norm"])
-        for r in emb.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            r6(F.avg(F.element_at("embedding", 1).cast("double"))).alias("dim0_mean"),
-            r6(F.avg(F.element_at("embedding", 2).cast("double"))).alias("dim1_mean"),
-            r6(F.avg(sq_norm)).alias("mean_sq_norm"),
-        )
-        .collect()
-    }
-    vec = {
-        r["label"]: (r["n"], r["dim0_mean"], r["dim1_mean"], r["mean_sq_norm"])
-        for r in centroid_by_label_vectorized(emb).collect()
-    }
-    assert set(expr) == set(vec)
-    for label, e in expr.items():
-        v = vec[label]
-        assert e[0] == v[0], label
-        for ev, vv in zip(e[1:], v[1:]):
-            assert ev == pytest.approx(vv, abs=2e-6), label
 
 
 def test_topk_kernel_emits_exact_fold_scores(emb):
@@ -390,79 +328,55 @@ def test_topk_kernel_emits_exact_fold_scores(emb):
         assert r["cosine"] == jvm[(r["qid"], r["vec_id"])], (r["qid"], r["vec_id"])
 
 
-def test_int8_vectorized_path_matches_expression_path(emb, spark):
-    """The numpy matrix kernel (above the metadata gate) must agree
-    BIT-identically with the small-input expression plan: every emitted
-    scalar is order-independent (per-vector max, int64 sum, elementwise
-    IEEE ops), so unlike the centroid hybrid there is no summation-order
-    drift to absorb — exact equality is the contract."""
-    import struct
+_RAGGED_ROWS = [
+    (0, 0, [2.0, 4.0]),
+    (1, 0, [6.0]),  # ragged: has no second dimension
+    (2, 0, None),  # NULL vector
+    (3, 1, []),  # empty vector
+]
 
-    from us_weather_energy_analysis_pipeline_spark.corpus._util import r6
-    from us_weather_energy_analysis_pipeline_spark.corpus.similarity_q import (
-        int8_quantize_vectorized,
+
+@pytest.mark.parametrize("name", ["embed_centroid_by_label", "embed_int8_quantize"])
+def test_embedding_query_matches_oracle_on_ragged_null_empty(spark, tmp_path, name):
+    """The vector queries' one native plan must equal their DuckDB oracle
+    on NULL, ragged and empty vectors: a missing dimension reads NULL
+    (never an out-of-bounds error under ANSI), a sum over an empty
+    vector is NULL, and the 1e-12 scale floor of an empty vector
+    (1.27e14) survives the 6-dp round."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from us_weather_energy_analysis_pipeline_spark.corpus.registry import (
+        REGISTRY,
+        _ensure_loaded,
     )
+    from us_weather_energy_analysis_pipeline_spark.testing import diff_report
 
-    e = F.transform("embedding", lambda x: x.cast("double"))
-    scale = F.lit(127.0) / F.greatest(
-        F.array_max(F.transform(e, F.abs)), F.lit(1e-12)
+    _ensure_loaded()
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in _RAGGED_ROWS], pa.int64()),
+                "label": pa.array([r[1] for r in _RAGGED_ROWS], pa.int32()),
+                "embedding": pa.array(
+                    [r[2] for r in _RAGGED_ROWS], pa.list_(pa.float32())
+                ),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
     )
-    xs = F.transform(e, lambda x: x * scale)
-    qv = F.transform(
-        xs, lambda x: (F.signum(x) * F.floor(F.abs(x) + F.lit(0.5))).cast("long")
+    q = REGISTRY[name]
+    got = q.spark_fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}')"
     )
-    expr = {
-        r["vec_id"]: (
-            struct.pack("<d", r["scale_r"]),
-            r["q_sum"],
-            r["q_min"],
-            r["q_max"],
-        )
-        for r in emb.select(
-            "vec_id",
-            r6(scale).alias("scale_r"),
-            F.aggregate(qv, F.lit(0).cast("long"), lambda a, v: a + v).alias("q_sum"),
-            F.array_min(qv).alias("q_min"),
-            F.array_max(qv).alias("q_max"),
-        ).collect()
-    }
-    vec = {
-        r["vec_id"]: (
-            struct.pack("<d", r["scale_r"]),
-            r["q_sum"],
-            r["q_min"],
-            r["q_max"],
-        )
-        for r in int8_quantize_vectorized(emb).collect()
-    }
-    assert expr == vec and len(expr) > 0
-
-
-def test_int8_vectorized_ragged_null_empty_fallback(spark):
-    """Ragged dims / NULL vectors / empty arrays force the per-row
-    fallback inside a batch; semantics must match the documented
-    contract (1e-12 scale floor, NULL stats for NULL vectors, zero sum
-    for empty arrays)."""
-    from us_weather_energy_analysis_pipeline_spark.corpus.similarity_q import (
-        int8_quantize_vectorized,
-    )
-    from us_weather_energy_analysis_pipeline_spark.session import local_df
-
-    rows = [
-        (1, [1.0, -2.0, 0.5]),
-        (2, [4.0]),          # ragged vs row 1 → np.stack fails → loop
-        (3, None),           # NULL vector
-        (4, []),             # empty array
-    ]
-    df = local_df(spark, rows, "vec_id long, embedding array<float>")
-    got = {r["vec_id"]: r.asDict() for r in int8_quantize_vectorized(df).collect()}
-    # scale = 127/2 = 63.5 → q = [64, -127, 32]
-    assert got[1]["q_max"] == 64 and got[1]["q_min"] == -127
-    assert got[1]["q_sum"] == 64 - 127 + 32
-    assert got[2]["q_sum"] == 127 and got[2]["q_min"] == 127
-    assert got[3]["q_sum"] is None and got[3]["q_min"] is None
-    assert got[4]["q_sum"] == 0 and got[4]["q_min"] is None
-    assert got[3]["scale_r"] == got[4]["scale_r"] > 1e13  # 127/1e-12, 6dp
+    want = con.execute(q.oracle).fetchdf()
+    con.close()
+    assert diff_report(got, want) is None, diff_report(got, want)
 
 
 def test_fold_cosine_zero_norm_returns_none():
@@ -515,9 +429,9 @@ def test_topk_candidates_ragged_batch_falls_back_to_exact_fold(spark):
     """A ragged corpus batch (mixed dims) must not crash the BLAS kernel;
     rows matching the query width keep their exact fold scores, mismatched
     widths score NULL (legacy zip_with NULL-padding semantics)."""
+    from us_weather_energy_analysis_pipeline_spark.corpus._util import py_dround
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         fold_cosine,
-        py_dround,
         topk_candidates,
     )
     from us_weather_energy_analysis_pipeline_spark.session import local_df
@@ -537,30 +451,6 @@ def test_topk_candidates_ragged_batch_falls_back_to_exact_fold(spark):
     assert got[3] is None  # width mismatch → NULL score, ranked last
     ranks = {r["vec_id"]: r["rnk"] for r in out}
     assert ranks[1] == 1 and ranks[3] == 4
-
-
-def test_centroid_vectorized_ragged_empty_fallback(spark):
-    """Ragged / zero-width embedding batches take the per-row path with
-    per-dim denominators: short vectors are skipped per-dim (avg-over-
-    present), not crashed on."""
-    from us_weather_energy_analysis_pipeline_spark.corpus.similarity_q import (
-        centroid_by_label_vectorized,
-    )
-    from us_weather_energy_analysis_pipeline_spark.session import local_df
-
-    rows = [
-        (0, [2.0, 4.0]),
-        (0, [6.0]),       # ragged: contributes to dim0 only
-        (0, None),        # NULL vector: counts in n only
-        (1, []),          # empty: ssq 0, dims NULL
-    ]
-    df = local_df(spark, rows, "label int, embedding array<float>")
-    got = {r["label"]: r.asDict() for r in centroid_by_label_vectorized(df).collect()}
-    assert got[0]["n"] == 3
-    assert got[0]["dim0_mean"] == pytest.approx((2.0 + 6.0) / 2)
-    assert got[0]["dim1_mean"] == pytest.approx(4.0)
-    assert got[0]["mean_sq_norm"] == pytest.approx((4 + 16 + 36) / 2)
-    assert got[1]["dim0_mean"] is None and got[1]["mean_sq_norm"] == 0.0
 
 
 def test_asof_same_source_equals_two_frame_operator(spark, sf_dir):
@@ -706,7 +596,7 @@ def test_ragged_embeddings_fail_with_actionable_error(spark):
         topk_candidates(emb, [(0, [1.0, 0.0, 0.0], None), (2, [1.0, 0.0], None)], 2)
 
 
-def test_query_block_gate_bounds_driver_collect(emb, spark):
+def test_query_block_gate_bounds_driver_collect(emb, spark, monkeypatch):
     """VERDICT r7 + r8 task 5: the query-side collects in brute/IVF/LSH
     top-k must be gated like rangejoin's inline path — limit(threshold+1)
     — so an over-threshold query table NEVER lands on the driver
@@ -754,10 +644,12 @@ def test_query_block_gate_bounds_driver_collect(emb, spark):
     cls.limit = spy_limit
     cls.collect = spy_collect
     try:
-        fb_ivf = ivf_topk(emb, q, k=2, max_query_block=3)
-        fb_lsh = lsh_topk(emb, q, k=2, max_query_block=3)
-        fb_mp = lsh_multiprobe_topk(emb, q, k=2, n_probes=2, max_query_block=3)
-        fb = brute_force_topk(emb, q, k=4, max_query_block=3)
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "QUERY_BLOCK_MAX", 3)
+            fb_ivf = ivf_topk(emb, q, k=2)
+            fb_lsh = lsh_topk(emb, q, k=2)
+            fb_mp = lsh_multiprobe_topk(emb, q, k=2, n_probes=2)
+            fb = brute_force_topk(emb, q, k=4)
     finally:
         cls.limit = orig_limit
         cls.collect = orig_collect
@@ -783,11 +675,12 @@ def test_query_block_gate_bounds_driver_collect(emb, spark):
     assert similarity.QUERY_BLOCK_MAX >= 1024  # default stays generous
 
 
-def test_ann_over_gate_fallbacks_match_kernel(emb, spark):
+def test_ann_over_gate_fallbacks_match_kernel(emb, spark, monkeypatch):
     """VERDICT r8 task 5: the distributed over-gate plans for IVF / LSH /
     multi-probe LSH must emit exactly the kernel path's rows — same probe
     choice (fold-identical dots, 6-dp margins, label/plane tie-breaks),
     same scores, same ranks, same schema."""
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         ivf_topk,
         lsh_multiprobe_topk,
@@ -804,7 +697,9 @@ def test_ann_over_gate_fallbacks_match_kernel(emb, spark):
         (lsh_multiprobe_topk, {"k": 3, "n_probes": 3}),
     ):
         kern = fn(emb, q, **kwargs)
-        fb = fn(emb, q, max_query_block=5, **kwargs)
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "QUERY_BLOCK_MAX", 5)
+            fb = fn(emb, q, **kwargs)
         # names + dtypes (nullability legitimately differs: mapInPandas
         # declares everything nullable, the join plan derives it)
         assert fb.dtypes == kern.dtypes, (fn.__name__, kwargs)
@@ -830,11 +725,12 @@ def test_lsh_multiprobe_flip_count_validated(emb):
         lsh_multiprobe_topk(emb, q, n_planes=6, k=2, n_probes=8)
 
 
-def test_brute_force_fallback_null_and_zero_norm_parity(spark):
+def test_brute_force_fallback_null_and_zero_norm_parity(spark, monkeypatch):
     """The distributed fallback must keep the kernel's edge semantics:
     NULL corpus vectors -> NULL cosine (ranked last), zero-norm vectors
     -> NULL cosine (0/0 must not become NaN, which Spark's DESC would
     rank FIRST), NULL ids dropped, id == qid excluded."""
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         brute_force_topk,
     )
@@ -856,7 +752,8 @@ def test_brute_force_fallback_null_and_zero_norm_parity(spark):
         spark, [(1, [1.0, 0.0]), (9, [0.5, 0.5])], "qid long, qv array<double>"
     )
     kern = brute_force_topk(corpus, q, k=10)
-    fb = brute_force_topk(corpus, q, k=10, max_query_block=1)  # force fallback
+    monkeypatch.setattr(similarity, "QUERY_BLOCK_MAX", 1)  # force fallback
+    fb = brute_force_topk(corpus, q, k=10)
     kr = sorted((r["qid"], r["vec_id"], r["cosine"], r["rnk"]) for r in kern.collect())
     fr = sorted((r["qid"], r["vec_id"], r["cosine"], r["rnk"]) for r in fb.collect())
     assert kr == fr
@@ -868,13 +765,14 @@ def test_brute_force_fallback_null_and_zero_norm_parity(spark):
     assert null_rnks and real_rnks and min(null_rnks) > max(real_rnks)
 
 
-def test_ivf_lsh_fallback_null_and_zero_norm_parity(spark):
+def test_ivf_lsh_fallback_null_and_zero_norm_parity(spark, monkeypatch):
     """The r9 distributed IVF/LSH/multiprobe fallbacks must keep the
     kernel paths' edge semantics: NULL query vectors dropped, NULL ids
     dropped, zero-norm vectors score NULL (never NaN), self-pairs
     excluded, NULL corpus vectors handled per family (IVF emits them
     with NULL cosine when their cell matches; LSH drops them at entry).
     """
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         ivf_topk,
         lsh_multiprobe_topk,
@@ -908,7 +806,9 @@ def test_ivf_lsh_fallback_null_and_zero_norm_parity(spark):
         (lsh_multiprobe_topk, {"k": 5, "n_planes": 3, "dim": 2, "n_probes": 2}),
     ):
         kern = fn(corpus, q, **kwargs)
-        fb = fn(corpus, q, max_query_block=1, **kwargs)
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "QUERY_BLOCK_MAX", 1)
+            fb = fn(corpus, q, **kwargs)
         kr = sorted(map(tuple, kern.collect()))
         fr = sorted(map(tuple, fb.collect()))
         assert kr == fr, (fn.__name__, kwargs)
@@ -972,10 +872,11 @@ def test_lsh_multiprobe_recall_supersets_single_probe(emb):
     assert sum(ov_m.values()) > sum(ov_s.values())  # recall strictly improves
 
 
-def test_lsh_multiprobe_gate_and_probe_validation(emb):
+def test_lsh_multiprobe_gate_and_probe_validation(emb, monkeypatch):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         lsh_multiprobe_topk,
     )
@@ -985,7 +886,9 @@ def test_lsh_multiprobe_gate_and_probe_validation(emb):
     )
     # over-gate no longer raises: it falls back to the distributed plan
     # (parity asserted in test_ann_over_gate_fallbacks_match_kernel)
-    assert lsh_multiprobe_topk(emb, q, k=2, max_query_block=2).columns[-1] == "rnk"
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "QUERY_BLOCK_MAX", 2)
+        assert lsh_multiprobe_topk(emb, q, k=2).columns[-1] == "rnk"
     with _pytest.raises(ValueError, match="n_probes"):
         lsh_multiprobe_topk(emb, q, k=2, n_probes=0)
 
@@ -1031,39 +934,15 @@ def test_ivf_multiprobe_recall_supersets_single_cell(emb):
         ivf_topk(emb, q, k=2, n_probes=0)
 
 
-def test_cosine_pairs_persist_opt_out_identical(emb):
-    """persist_input=False (the 100 TB posture: re-scan instead of caching
-    the raw corpus) must produce the identical pair set and scores."""
-    from pyspark.sql import functions as F
-
-    from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
-        grouped_candidate_pairs,
-    )
-
-    sub = emb.filter(F.col("vec_id") < 60).select(
-        "vec_id", "embedding", F.lit(0).alias("g")
-    )
-    a = sorted(
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in grouped_candidate_pairs(sub, 0.2, "g", exact=True).collect()
-    )
-    b = sorted(
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in grouped_candidate_pairs(
-            sub, 0.2, "g", exact=True, persist_input=False
-        ).collect()
-    )
-    assert a == b and len(a) > 0
-
-
-def test_single_block_fast_path_matches_blocked_machinery(emb):
+def test_single_block_fast_path_matches_blocked_machinery(emb, monkeypatch):
     """VERDICT r8 task 2: the footer-gated single-block fast path must
     emit the identical pair set (and exact cosines) as the full
-    sizes/pack/pair-join machinery, for both exact modes and for a
-    multi-group key. A tiny block_rows defeats the footer gate, forcing
-    the blocked path on the same input."""
+    sizes/pack/pair-join machinery for a multi-group key. A BLOCK_ROWS
+    below the input size defeats the footer gate, forcing the blocked
+    path on the same input."""
     from pyspark.sql import functions as F
 
+    from us_weather_energy_analysis_pipeline_spark.operators import cache, similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         grouped_candidate_pairs,
     )
@@ -1071,32 +950,29 @@ def test_single_block_fast_path_matches_blocked_machinery(emb):
     sub = emb.filter(F.col("vec_id") < 80).select(
         "vec_id", "embedding", (F.col("vec_id") % 3).alias("g")
     )
-    for kwargs in ({"exact": True}, {"exact": False}):
-        fast = grouped_candidate_pairs(sub, 0.15, "g", **kwargs)
-        slow = grouped_candidate_pairs(sub, 0.15, "g", block_rows=9, **kwargs)
-        # force_blocked runs the blocked machinery at the DEFAULT
-        # block_rows (single block per group) — the probe/test override
-        forced = grouped_candidate_pairs(
-            sub, 0.15, "g", force_blocked=True, **kwargs
-        )
-        f = sorted(map(tuple, fast.collect()))
-        s = sorted(map(tuple, slow.collect()))
-        fo = sorted(map(tuple, forced.collect()))
-        assert f == s == fo and len(f) > 0, kwargs
-    # the gate really chose different plans: fast has no pair join.
-    # (release the blocked calls' tracked persists first — a cached
-    # InMemoryRelation leaf has no input files, so the footer gate would
-    # conservatively fall back to the blocked path)
-    from us_weather_energy_analysis_pipeline_spark.operators import cache
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
 
     cache.release_all()
-    fast_plan = grouped_candidate_pairs(sub, 0.15, "g")._jdf.queryExecution().optimizedPlan().toString()
-    slow_plan = grouped_candidate_pairs(sub, 0.15, "g", block_rows=9)._jdf.queryExecution().optimizedPlan().toString()
+    fast = grouped_candidate_pairs(sub, 0.15, "g")
+    fast_plan = plan(fast)
+    f = sorted(map(tuple, fast.collect()))
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "BLOCK_ROWS", 9)
+        slow = grouped_candidate_pairs(sub, 0.15, "g")
+    s = sorted(map(tuple, slow.collect()))
+    assert f == s and len(f) > 0
+    # the gate really chose different plans: fast has no pair join
+    # (built with no tracked persists alive: a cached InMemoryRelation
+    # leaf has no input files, so the footer gate would conservatively
+    # fall back to the blocked path)
     assert "Join" not in fast_plan
-    assert "Join" in slow_plan
+    assert "Join" in plan(slow)
+    cache.release_all()
 
 
-def test_fallback_plan_uses_cogroup_kernel(spark):
+def test_fallback_plan_uses_cogroup_kernel(spark, monkeypatch):
     """r10 (VERDICT r9 task 2): the over-gate IVF/LSH fallbacks must
     score pairs through the per-cell cogrouped BLAS kernel
     (FlatMapCoGroupsInPandas) — never through per-pair flat
@@ -1105,12 +981,14 @@ def test_fallback_plan_uses_cogroup_kernel(spark):
     ~60 s of exactly that). The plan must also carry no giant codegen
     projection: the only dim-term chains left are the bounded pre-probe
     centroid scores."""
+    from us_weather_energy_analysis_pipeline_spark.operators import similarity
     from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
         ivf_topk,
         lsh_topk,
     )
     from us_weather_energy_analysis_pipeline_spark.session import local_df
 
+    monkeypatch.setattr(similarity, "QUERY_BLOCK_MAX", 1)
     corpus = local_df(
         spark,
         [(i, [float(i % 5), 1.0], i % 3) for i in range(12)],
@@ -1122,9 +1000,9 @@ def test_fallback_plan_uses_cogroup_kernel(spark):
         "qid long, qv array<double>",
     )
     for df in (
-        ivf_topk(corpus, q, k=2, max_query_block=1, dim=2),
-        ivf_topk(corpus, q, k=2, max_query_block=1),  # dim-agnostic too
-        lsh_topk(corpus, q, k=2, n_planes=3, dim=2, max_query_block=1),
+        ivf_topk(corpus, q, k=2, dim=2),
+        ivf_topk(corpus, q, k=2),  # dim-agnostic too
+        lsh_topk(corpus, q, k=2, n_planes=3, dim=2),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapCoGroupsInPandas" in plan

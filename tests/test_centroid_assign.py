@@ -13,11 +13,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from us_weather_energy_analysis_pipeline_spark.corpus._util import py_dround
 from us_weather_energy_analysis_pipeline_spark.operators.similarity import (
     assign_nearest_centroid,
     collect_centroids,
     fold_cosine,
-    py_dround,
 )
 
 CENTS = [

@@ -350,6 +350,14 @@ def test_cosine_pair_dedup_no_driver_collect(spark, sf_dir):
     assert "CollectLimit" not in plan
 
 
+@pytest.mark.parametrize("name", ["embed_centroid_by_label", "embed_int8_quantize"])
+def test_vector_queries_plan_without_python_stage(spark, sf_dir, name):
+    """The per-vector queries keep one native expression plan at every
+    input size: no Python stage (MapInPandas, a Python UDF) anywhere."""
+    plan = _formatted(spark, name, sf_dir)
+    assert not re.search(r"MapInPandas|PythonUDF|EvalPython", plan, re.I), plan
+
+
 def test_ascii_fold_literals_match_canonical():
     """Every hand-inlined translate(..., 'A..Z', 'a..z') fold in the
     corpus/operator sources (oracle SQL strings can't call the helper)

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.corpus.winnow_q import (
@@ -17,25 +16,21 @@ from us_weather_energy_analysis_pipeline_spark.corpus.winnow_q import (
 from us_weather_energy_analysis_pipeline_spark.session import local_df
 
 
-HASH_FNS = ("md5", "xxhash64")  # oracle contract / production path
-
-
-def _sel_hashes(spark, docs, hash_fn="md5"):
+def _sel_hashes(spark, docs):
     df = local_df(spark, docs, "doc_id long, text string")
-    rows = winnow_selected(df, hash_fn=hash_fn).collect()
+    rows = winnow_selected(df).collect()
     out = {}
     for r in rows:
         out.setdefault(r["doc_id"], set()).add(r["sel"] >> 32)
     return out
 
 
-@pytest.mark.parametrize("hash_fn", HASH_FNS)
-def test_shared_run_shares_a_fingerprint(spark, hash_fn):
+def test_shared_run_shares_a_fingerprint(spark):
     """Schleimer et al. theorem: any match of length ≥ w+k−1 words is
     caught — the run contributes w consecutive grams, one full window
     lies inside it, and that window's min-hash gram is selected in BOTH
     documents regardless of surrounding text or position offsets.
-    Holds for ANY deterministic gram hash, so both families are checked."""
+    Holds for ANY deterministic gram hash."""
     rng = random.Random(7)
     vocab = [f"tok{i}" for i in range(500)]
     run = " ".join(rng.choice(vocab) for _ in range(WINNOW_W + WINNOW_K - 1))
@@ -48,12 +43,11 @@ def test_shared_run_shares_a_fingerprint(spark, hash_fn):
             (1, " ".join(x for x in (pre_a, run, suf_a) if x)),
             (2, " ".join(x for x in (pre_b, run, suf_b) if x)),
         ]
-        sels = _sel_hashes(spark, docs, hash_fn)
+        sels = _sel_hashes(spark, docs)
         assert sels[1] & sels[2], f"trial {trial}: no shared fingerprint"
 
 
-@pytest.mark.parametrize("hash_fn", HASH_FNS)
-def test_short_doc_degrades_to_whole_doc_window(spark, hash_fn):
+def test_short_doc_degrades_to_whole_doc_window(spark):
     """Fewer than w grams → exactly one window (the whole doc) → exactly
     one selected fingerprint; below k tokens → no grams, doc absent."""
     docs = [
@@ -61,13 +55,12 @@ def test_short_doc_degrades_to_whole_doc_window(spark, hash_fn):
         (2, "alpha beta gamma delta"),      # 2 grams < w → still 1 window
         (3, "just two"),                    # < k tokens → no output
     ]
-    sels = _sel_hashes(spark, docs, hash_fn)
+    sels = _sel_hashes(spark, docs)
     assert len(sels[1]) == 1 and len(sels[2]) == 1
     assert 3 not in sels
 
 
-@pytest.mark.parametrize("hash_fn", HASH_FNS)
-def test_density_tracks_theory(spark, hash_fn):
+def test_density_tracks_theory(spark):
     """Selected density on random text ≈ 2/(w+1) (the paper's expected
     density for winnowing); allow a generous band."""
     rng = random.Random(11)
@@ -75,36 +68,10 @@ def test_density_tracks_theory(spark, hash_fn):
     text = " ".join(rng.choice(vocab) for _ in range(4000))
     df = local_df(spark, [(1, text)], "doc_id long, text string")
     n_grams = 4000 - WINNOW_K + 1
-    n_sel = winnow_selected(df, hash_fn=hash_fn).count()
+    n_sel = winnow_selected(df).count()
     density = n_sel / n_grams
     expected = 2.0 / (WINNOW_W + 1)
     assert expected * 0.7 < density < expected * 1.3, density
-
-
-def test_winnow_xxhash64_variant_equivalent_pairs(spark):
-    """Production-path equivalence (VERDICT r5 item 2, mirroring the
-    MinHash candidate-equivalence test): on the fixture corpus the
-    md5 (oracle-contract) and xxhash64 (production) gram-hash families
-    must surface the SAME near-dup pair set. Different hashes select
-    different window minima, so fingerprint sets (and hence the exact
-    Jaccard values) may differ — but both are unbiased samples of the
-    same gram population, so pairs that clear the threshold agree except
-    within sampling noise of the cut; the fixture corpus's dup pairs sit
-    well away from it."""
-    from us_weather_energy_analysis_pipeline_spark.corpus.registry import load
-    from us_weather_energy_analysis_pipeline_spark.corpus.winnow_q import (
-        winnow_near_dups,
-    )
-
-    d = load(spark, "/root/testdata/sf0.001", "documents")
-    pairs = {}
-    for hash_fn in HASH_FNS:
-        rows = winnow_near_dups(d, hash_fn=hash_fn).collect()
-        pairs[hash_fn] = {(r["doc_a"], r["doc_b"]) for r in rows}
-    assert pairs["md5"], "fixture corpus produced no near-dup pairs"
-    assert pairs["md5"] == pairs["xxhash64"], (
-        pairs["md5"] ^ pairs["xxhash64"]
-    )
 
 
 def test_winnow_pairs_finds_planted_near_dup(spark):
@@ -184,7 +151,7 @@ def test_pair_bound_prefilter_is_exact_and_below_the_aggregate(spark):
         (3, big + " trailing bits"), # near-dup of 2 (keep path)
     ]
     d = local_df(spark, docs, "doc_id long, text string")
-    out = winnow_near_dups(d, hash_fn="md5")
+    out = winnow_near_dups(d)
     rows = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in out.collect()}
     # keep path: 2-3 are near-dups
     assert (2, 3) in rows
@@ -193,7 +160,7 @@ def test_pair_bound_prefilter_is_exact_and_below_the_aggregate(spark):
     from us_weather_energy_analysis_pipeline_spark.corpus.winnow_q import (
         WINNOW_DF_CAP, WINNOW_JACCARD, winnow_selected,
     )
-    sel = winnow_selected(d, hash_fn="md5").collect()
+    sel = winnow_selected(d).collect()
     fps: dict[int, set] = {}
     for r in sel:
         fps.setdefault(r["doc_id"], set()).add(r["sel"] >> 32)

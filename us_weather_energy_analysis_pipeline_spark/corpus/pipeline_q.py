@@ -220,7 +220,7 @@ def embed_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the tiny survivor set is re-scored EXACTLY with the sequential
     fold formula, so the kept pairs are bit-identical to the oracle's
     list_cosine_similarity decision. No task ever holds more than two
-    ``block_rows``-row blocks regardless of bucket size — a pathological
+    ``BLOCK_ROWS``-row blocks regardless of bucket size — a pathological
     bucket (all-near-identical corpus, too few planes) degrades to more
     block-pair tasks, never to one OOM-ing task."""
     from us_weather_energy_analysis_pipeline_spark.operators.components import (
@@ -244,7 +244,6 @@ def embed_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             id_col="vec_id",
             vec_col="embedding",
-            exact=True,
         )
         .filter(F.round(F.col("cosine"), 6) >= EMB_COS_THRESHOLD)
         .select(F.col("id_a").alias("ia"), F.col("id_b").alias("ib"))

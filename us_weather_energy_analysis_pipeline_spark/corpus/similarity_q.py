@@ -7,9 +7,9 @@ per-query top-k via window rank on the ROUNDED score so ranking is
 deterministic across engines. The sub-linear scale paths (IVF cells,
 hyperplane-LSH buckets) share the kernel and appear below as
 ``embed_ivf_topk`` / ``embed_lsh_bucket_topk``. Per-row vector transforms
-(int8 quantization, centroid partials) run as numpy ``mapInPandas`` with
-binary-round twins — the interpreted higher-order-function forms benched
-9–15× DuckDB (VERDICT r4).
+(int8 quantization, centroid partials) run as native higher-order
+expressions with no Python stage, and match DuckDB on NULL, ragged and
+empty vectors.
 """
 
 from __future__ import annotations
@@ -98,127 +98,29 @@ def embed_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid summary (the reduce step of IVF coarse
     quantization): element means + mean squared norm.
 
-    Metadata-gated hybrid (both paths oracle-green, chosen per input size
-    with NO extra job — ``inputFiles`` is driver-side FileIndex metadata):
-
-    - small inputs (< ``_CENTROID_GATE_BYTES``): native expression plan —
-      the per-row HOF squared-norm fold costs ~μs/row, far below the
-      measured ~0.2 s per-Python-stage floor (identity ``mapInPandas``
-      A/B, BENCH_NOTES), so staying JVM-side is strictly faster;
-    - above the gate: vectorized map-side partial aggregation — one
-      ``mapInPandas`` pass emits per-(batch, label) partial sums/counts
-      in numpy, the JVM groupBy folds them. Classic partial-agg shape,
-      one shuffle of O(labels × batches) rows; the per-row BLAS vs HOF
-      fold drift (~1e-16 relative) is absorbed by the 6-dp round after
-      the mean — the same accepted reaggregation risk as every
-      distributed double sum in the corpus.
-
-    This is the same adaptive shape AQE applies to join strategy: plan
-    choice from size statistics, identical semantics either way (both
-    branches run in the test suite)."""
-    from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
-        input_bytes as _input_bytes,
-    )
-
+    One native expression plan at every size: a partial aggregate per
+    partition and one exchange of O(labels) rows, no Python stage (the
+    per-row squared-norm fold costs ~μs/row, far below the ~0.2 s floor
+    of a Python stage, BENCH_NOTES). NULL, ragged and empty vectors
+    follow DuckDB: a dimension a vector lacks reads NULL
+    (``try_element_at``, where ``element_at`` raises under ANSI), and an
+    empty vector's squared norm is NULL, like DuckDB's sum over an empty
+    list, so it stays out of the mean."""
     emb = load(spark, sf_dir, "embeddings")
-    if _input_bytes(emb) < _CENTROID_GATE_BYTES:
-        sq_norm = F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return emb.groupBy("label").agg(
-            F.count(F.lit(1)).alias("n"),
-            r6(F.avg(F.element_at("embedding", 1).cast("double"))).alias("dim0_mean"),
-            r6(F.avg(F.element_at("embedding", 2).cast("double"))).alias("dim1_mean"),
-            r6(F.avg(sq_norm)).alias("mean_sq_norm"),
-        )
-    return centroid_by_label_vectorized(emb)
-
-
-_CENTROID_GATE_BYTES = 32 << 20  # ~500k vectors; HOF μs/row × n < python-stage floor
-
-
-def centroid_by_label_vectorized(emb: DataFrame) -> DataFrame:
-    """The above-the-gate path of ``embed_centroid_by_label`` — numpy
-    map-side partial aggregation, exported so tests and scale probes can
-    force it regardless of input size.
-
-    The vstack fast path assumes the overwhelmingly-common uniform-dim
-    batch; ragged or zero-width batches fall back to a per-row loop
-    (same pattern as ``int8_quantize_vectorized``) with per-stat
-    denominators: a vector too short for dim i is skipped in that dim's
-    mean (avg-over-present semantics), never crashed on. For uniform
-    inputs cnt0 = cnt1 = cnt, so the fast path's sums/denominators are
-    bit-identical to before."""
-
-    def partials(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = []
-            for label, g in pdf.groupby("label", dropna=False, sort=False):
-                ok = g["embedding"].notna()
-                cnt = int(ok.sum())
-                s0 = s1 = ssq = 0.0
-                cnt0 = cnt1 = 0
-                if cnt:
-                    vecs = [
-                        np.asarray(v, dtype=np.float64) for v in g["embedding"][ok]
-                    ]
-                    V = None
-                    try:
-                        V = np.vstack(vecs)
-                    except ValueError:  # ragged batch → per-row path
-                        V = None
-                    if V is not None and V.ndim == 2 and V.shape[1] >= 2:
-                        s0, s1 = float(V[:, 0].sum()), float(V[:, 1].sum())
-                        ssq = float((V * V).sum())
-                        cnt0 = cnt1 = cnt
-                    else:
-                        for e in vecs:
-                            if e.size >= 1:
-                                s0 += float(e[0])
-                                cnt0 += 1
-                            if e.size >= 2:
-                                s1 += float(e[1])
-                                cnt1 += 1
-                            ssq += float((e * e).sum())
-                rows.append(
-                    (
-                        None if pd.isna(label) else int(label),
-                        len(g),
-                        cnt,
-                        cnt0,
-                        cnt1,
-                        s0,
-                        s1,
-                        ssq,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["label", "n", "cnt", "cnt0", "cnt1", "s0", "s1", "ssq"],
-            )
-
-    part = emb.select("label", "embedding").mapInPandas(
-        partials,
-        "label int, n long, cnt long, cnt0 long, cnt1 long, "
-        "s0 double, s1 double, ssq double",
+    sq_norm = F.aggregate(
+        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
 
-    def mean(s, c):  # avg() twin: NULL when no contributing rows
-        den = F.sum(c)
-        return F.when(den > 0, F.sum(s) / den)
+    def dim(i: int):
+        return F.try_element_at("embedding", F.lit(i)).cast("double")
 
-    return part.groupBy("label").agg(
-        F.sum("n").alias("n"),
-        r6(mean("s0", "cnt0")).alias("dim0_mean"),
-        r6(mean("s1", "cnt1")).alias("dim1_mean"),
-        r6(mean("ssq", "cnt")).alias("mean_sq_norm"),
+    return emb.groupBy("label").agg(
+        F.count(F.lit(1)).alias("n"),
+        r6(F.avg(dim(1))).alias("dim0_mean"),
+        r6(F.avg(dim(2))).alias("dim1_mean"),
+        r6(F.avg(F.when(F.size("embedding") > 0, sq_norm))).alias("mean_sq_norm"),
     )
 
 
@@ -491,142 +393,40 @@ def embed_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-certify every element through the sum without comparing raw
     arrays.
 
-    Metadata-gated hybrid, same shape (and gate) as
-    ``embed_centroid_by_label``: below the gate a native higher-order
-    expression plan (the mapInPandas python-stage floor, ~0.2 s, dwarfs
-    the μs/row HOF cost at test SFs); above it the vectorized numpy
-    kernel (``int8_quantize_vectorized``). Unlike the centroid hybrid
-    the two paths are BIT-identical, not merely round-absorbed: every
-    per-vector scalar is order-independent (max, int64 sum, elementwise
-    IEEE ops), so no summation-order drift exists to absorb."""
-    from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
-        input_bytes as _input_bytes,
-    )
-
+    One native expression plan at every size, no Python stage. An empty
+    vector follows DuckDB: ``array_max`` is NULL, so the scale takes the
+    1e-12 floor (1.27e14, which the overflow-safe round keeps), and its
+    quantized sum is NULL like DuckDB's ``list_sum([])``."""
     d = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    if _input_bytes(d) < _CENTROID_GATE_BYTES:
-        # STAGED projections: `scale` must be a bound per-row attribute
-        # before any per-element lambda references it — an inline
-        # expression would be re-evaluated (array_max included) for
-        # EVERY element, turning the row cost O(d) into O(d²)
-        # (measured 0.14 s → 1.45 s at sf0.1 before this staging).
-        staged = d.withColumn(
-            "_e", F.transform("embedding", lambda x: x.cast("double"))
-        ).withColumn(
-            "_scale",
-            F.lit(127.0)
-            / F.greatest(F.array_max(F.transform("_e", F.abs)), F.lit(1e-12)),
-        ).withColumn(
-            # dround(x, 0) twin, elementwise: signum·floor(|x|+0.5)
-            "_qv",
-            F.transform(
-                "_e",
-                lambda x: (
-                    F.signum(x * F.col("_scale"))
-                    * F.floor(F.abs(x * F.col("_scale")) + F.lit(0.5))
-                ).cast("long"),
-            ),
-        )
-        return staged.select(
-            "vec_id",
-            r6(F.col("_scale")).alias("scale_r"),
-            F.aggregate(F.col("_qv"), F.lit(0).cast("long"), lambda a, v: a + v).alias(
-                "q_sum"
-            ),
-            F.array_min("_qv").alias("q_min"),
-            F.array_max("_qv").alias("q_max"),
-        )
-    return int8_quantize_vectorized(d)
-
-
-def int8_quantize_vectorized(d: DataFrame) -> DataFrame:
-    """Arrow-batched numpy kernel for int8 quantization — the 100 TB
-    path. Uniform-dimension batches (the overwhelmingly common case:
-    embedding tables have one model's dim) quantize as ONE matrix op per
-    batch; ragged or null-bearing batches fall back to the per-row loop
-    with identical arithmetic."""
-
-    def quantize(batches):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        def drnd6(x):
-            return math.copysign(1.0, x) * math.floor(abs(x) * 1e6 + 0.5) / 1e6
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vids = pd.array(
-                [None if pd.isna(v) else int(v) for v in pdf["vec_id"]],
-                dtype="Int64",
-            )
-            emb = list(pdf["embedding"])
-            # vectorized fast path: no null vectors, uniform non-zero dims
-            # (np.stack raises on ragged input)
-            M = None
-            if not any(
-                v is None or (isinstance(v, float) and pd.isna(v)) for v in emb
-            ):
-                try:
-                    M = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-                except ValueError:
-                    M = None
-            if M is not None and M.ndim == 2 and M.shape[1] > 0:
-                scale = 127.0 / np.maximum(np.abs(M).max(axis=1), 1e-12)
-                x = M * scale[:, None]
-                # dround(x, 0) twin, elementwise: signum·floor(|x|+0.5)
-                q = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
-                # drnd6 twin, elementwise (copysign/floor are the same
-                # IEEE ops the scalar form uses)
-                sr = np.copysign(1.0, scale) * np.floor(
-                    np.abs(scale) * 1e6 + 0.5
-                ) / 1e6
-                yield pd.DataFrame(
-                    {
-                        "vec_id": vids,
-                        "scale_r": sr,
-                        "q_sum": pd.array(q.sum(axis=1), dtype="Int64"),
-                        "q_min": pd.array(q.min(axis=1), dtype="Int64"),
-                        "q_max": pd.array(q.max(axis=1), dtype="Int64"),
-                    }
-                )
-                continue
-            scale_r, qs, qmin, qmax = [], [], [], []
-            for v in emb:
-                if v is None or (isinstance(v, float) and pd.isna(v)):
-                    # legacy null-row semantics: greatest(NULL, 1e-12) →
-                    # 1e-12 floor, quantized stats NULL
-                    scale_r.append(drnd6(127.0 / 1e-12))
-                    qs.append(None), qmin.append(None), qmax.append(None)
-                    continue
-                e = np.asarray(v, dtype=np.float64)
-                if e.size == 0:
-                    # array_max([]) = NULL → 1e-12 floor; empty fold = 0
-                    scale_r.append(drnd6(127.0 / 1e-12))
-                    qs.append(0), qmin.append(None), qmax.append(None)
-                    continue
-                scale = 127.0 / max(float(np.abs(e).max()), 1e-12)
-                x = e * scale
-                # dround(x, 0) twin, elementwise: signum·floor(|x|+0.5)
-                q = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
-                scale_r.append(drnd6(scale))
-                qs.append(int(q.sum())), qmin.append(int(q.min())), qmax.append(
-                    int(q.max())
-                )
-            yield pd.DataFrame(
-                {
-                    "vec_id": vids,
-                    "scale_r": scale_r,
-                    "q_sum": pd.array(qs, dtype="Int64"),
-                    "q_min": pd.array(qmin, dtype="Int64"),
-                    "q_max": pd.array(qmax, dtype="Int64"),
-                }
-            )
-
-    return d.select("vec_id", "embedding").mapInPandas(
-        quantize, "vec_id long, scale_r double, q_sum long, q_min long, q_max long"
+    # STAGED projections: `scale` must be a bound per-row attribute
+    # before any per-element lambda references it — an inline
+    # expression would be re-evaluated (array_max included) for
+    # EVERY element, turning the row cost O(d) into O(d²)
+    # (measured 0.14 s → 1.45 s at sf0.1 before this staging).
+    staged = d.withColumn(
+        "_e", F.transform("embedding", lambda x: x.cast("double"))
+    ).withColumn(
+        "_scale",
+        F.lit(127.0)
+        / F.greatest(F.array_max(F.transform("_e", F.abs)), F.lit(1e-12)),
+    ).withColumn(
+        # dround(x, 0) twin, elementwise: signum·floor(|x|+0.5)
+        "_qv",
+        F.transform(
+            "_e",
+            lambda x: (
+                F.signum(x * F.col("_scale"))
+                * F.floor(F.abs(x * F.col("_scale")) + F.lit(0.5))
+            ).cast("long"),
+        ),
+    )
+    q_sum = F.aggregate(F.col("_qv"), F.lit(0).cast("long"), lambda a, v: a + v)
+    return staged.select(
+        "vec_id",
+        r6(F.col("_scale")).alias("scale_r"),
+        F.when(F.size("_qv") > 0, q_sum).alias("q_sum"),
+        F.array_min("_qv").alias("q_min"),
+        F.array_max("_qv").alias("q_max"),
     )
 
 

@@ -103,7 +103,6 @@ def winnow_selected(
     text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
-    hash_fn: str = "md5",
     dedupe: bool = True,
 ) -> DataFrame:
     """(doc_id, n_grams, sel) — the distinct winnowing selections, where
@@ -112,22 +111,11 @@ def winnow_selected(
     corpus query so the copy-detection property (shared run ≥ w+k−1
     words ⇒ shared fingerprint hash) is testable directly.
 
-    ``hash_fn`` picks the gram-hash family (same contract as
-    ``operators.dedup._shingle_hash_expr``):
-
-    - ``md5`` — the ORACLE CONTRACT: 28-bit md5-hex prefix, DuckDB
-      regenerates identical integers so the selected set is
-      value-checkable cross-engine. Cost: a 32-char hex string per gram,
-      then a 7-char substring + base-16 parse — the admitted map-side
-      bound (VERDICT r5: 2.7–4.0× DuckDB on the winnow family).
-    - ``xxhash64`` — the PRODUCTION path: codegen'd xxHash64 straight
-      over the k token columns (``xxhash64(tok_i, …, tok_{i+k-1})`` —
-      no gram string is ever built), masked to 31 bits so the packed
-      key h·2³² + i stays inside signed int64. No DuckDB twin; verified
-      by the paper-property tests + the pair-set equivalence test
-      (``tests/test_winnow.py``). The winnowing guarantees (2/(w+1)
-      density, shared-run ⇒ shared fingerprint) hold for any uniform
-      hash family — only the tie-breaks among window minima differ.
+    The gram hash is the 28-bit md5-hex prefix, the ORACLE CONTRACT:
+    DuckDB regenerates identical integers, so the selected set is
+    value-checkable cross-engine. Cost: a 32-char hex string per gram,
+    then a 7-char substring + base-16 parse — the admitted map-side
+    bound (VERDICT r5: 2.7–4.0× DuckDB on the winnow family).
     """
     # Built as parsed SQL strings, not Column chains (r10): each Column
     # op is a ~1.4 ms py4j round-trip and bench rebuilds this plan every
@@ -140,19 +128,10 @@ def winnow_selected(
     base = d.selectExpr(
         "doc_id", f"split({ascii_lower_sql(f'trim({text_col})')}, ' ') AS t"
     ).filter(f"size(t) >= {k}")
-    if hash_fn == "md5":
-        h_sql = (
-            f"CAST(conv(substring(md5(array_join(slice(t, i, {k}), ' ')),"
-            " 1, 7), 16, 10) AS BIGINT)"
-        )
-    elif hash_fn == "xxhash64":
-        # hash the k tokens as separate args: position j is seed-chained
-        # by xxhash64 itself, so ("ab","c") and ("a","bc") differ and no
-        # join/concat string is materialized per gram
-        args = ", ".join(f"element_at(t, i + {j})" for j in range(k))
-        h_sql = f"(xxhash64({args}) & 2147483647)"
-    else:
-        raise ValueError(f"unknown winnow gram-hash family: {hash_fn!r}")
+    h_sql = (
+        f"CAST(conv(substring(md5(array_join(slice(t, i, {k}), ' ')),"
+        " 1, 7), 16, 10) AS BIGINT)"
+    )
     # n_grams = size(t) − k + 1 is a per-doc CONSTANT known at the base
     # projection — carried through the explode instead of recomputed as
     # a count-over-doc window (r6: that second WindowExec pass shared
@@ -252,7 +231,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-stage blocking for long-document dedup. One exchange per
     stage, all bounded, no self-join."""
     d = load(spark, sf_dir, "documents")
-    return winnow_near_dups(d, hash_fn="md5")
+    return winnow_near_dups(d)
 
 
 def winnow_near_dups(
@@ -260,15 +239,9 @@ def winnow_near_dups(
     text_col: str = "text",
     df_cap: int = WINNOW_DF_CAP,
     threshold: float = WINNOW_JACCARD,
-    hash_fn: str = "md5",
 ) -> DataFrame:
-    """The `dedup_winnow_pairs` pipeline, reusable with either gram-hash
-    family (see ``winnow_selected``): ``md5`` keeps the DuckDB value
-    twin; ``hash_fn='xxhash64'`` is the production path — identical plan
-    shape (df-capped posting lists, map-side ordered pairs, Jaccard
-    filter), minus the per-gram hex-string materialization. Pair-set
-    equivalence between the families is asserted on the fixture corpus
-    in ``tests/test_winnow.py``.
+    """The `dedup_winnow_pairs` pipeline over ``winnow_selected``'s md5
+    gram hashes (the DuckDB value twin).
 
     Plan (r8 rewrite, VERDICT task 1 — was 14 jobs with three persists
     and two sizes joins): ONE persist (the fingerprint index, which
@@ -289,7 +262,7 @@ def winnow_near_dups(
     from us_weather_energy_analysis_pipeline_spark.operators import cache
 
     fps_all = cache.track(
-        winnow_selected(d, text_col, hash_fn=hash_fn, dedupe=False)
+        winnow_selected(d, text_col, dedupe=False)
         .selectExpr("doc_id", "shiftrightunsigned(sel, 32) AS h")
         .distinct()
     )

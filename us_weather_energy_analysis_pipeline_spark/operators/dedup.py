@@ -59,38 +59,18 @@ def word_shingles(
     return out.distinct() if dedupe else out
 
 
-def _shingle_hash_expr(hash_fn: str) -> str:
-    """32-bit shingle-hash SQL expression for the chosen family.
-
-    - ``md5``: the ORACLE CONTRACT — DuckDB regenerates the identical
-      value, so every downstream stage is value-checkable cross-engine.
-      Cost: builds a 32-char hex string per shingle, then parses 8 chars.
-    - ``xxhash64``: the PRODUCTION path — Spark's codegen'd 64-bit
-      xxHash directly on the string bytes, masked to 32 bits so the
-      universal-hash arithmetic (a·h + b < 2^63) stays overflow-free.
-      No cross-engine twin (DuckDB lacks xxhash64), so it is verified by
-      the candidate-set equivalence test + rows-only checks, not a value
-      hash. Use this at scale: it skips the hex-string materialization
-      that makes md5 the admitted map-side bound (~2.2× DuckDB).
-    """
-    if hash_fn == "md5":
-        return "cast(conv(substring(md5(shingle), 1, 8), 16, 10) AS bigint)"
-    if hash_fn == "xxhash64":
-        return "xxhash64(shingle) & 4294967295"
-    raise ValueError(f"unknown shingle hash family: {hash_fn!r}")
-
-
 def minhash_sig_ctes(
     text_col: str = "text",
     k: int = MINHASH_K,
-    hash_fn: str = "md5",
     shingle_k: int = 3,
 ) -> str:
     """CTE text (``base``, ``sh``, ``perm``, ``sig``) computing per-doc
     MinHash signatures over a ``{docs}`` template slot — the shared
     front half of every single-statement minhash query (r11 build cut):
     composing CTE TEXT instead of DataFrames keeps each consumer at one
-    parse + one analysis."""
+    parse + one analysis. The shingle hash is the 32-bit md5 prefix, the
+    oracle contract: DuckDB regenerates the identical value, so every
+    downstream stage is value-checkable cross-engine."""
     from us_weather_energy_analysis_pipeline_spark.functions.text import (
         ascii_lower_sql,
     )
@@ -119,7 +99,7 @@ def minhash_sig_ctes(
     ),
     perm AS (
       SELECT doc_id, {perms}
-      FROM (SELECT doc_id, {_shingle_hash_expr(hash_fn)} AS hv FROM sh)
+      FROM (SELECT doc_id, cast(conv(substring(md5(shingle), 1, 8), 16, 10) AS bigint) AS hv FROM sh)
     ),
     sig AS (
       SELECT doc_id, array({', '.join(f'm{s}' for s in range(k))}) AS sig
@@ -156,7 +136,6 @@ def minhash_near_dups(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     threshold: float = 0.5,
-    hash_fn: str = "md5",
     est_round: int | None = None,
 ) -> DataFrame:
     """Full MinHash/LSH near-dup pipeline: candidates via banding, then
@@ -190,12 +169,6 @@ def minhash_near_dups(
     one join partition before, and occupancy is digest-bounded (64-bit
     digests collide only for near-identical signatures).
 
-    ``hash_fn='xxhash64'`` swaps the shingle hash for the production
-    family (see ``_shingle_hash_expr``): same pipeline shape, same
-    Jaccard-estimate statistics (any uniform 32-bit hash family gives an
-    unbiased estimator), but no DuckDB value twin — deploy that variant
-    at scale, keep md5 where cross-engine auditability matters.
-
     Built as ONE ``spark.sql`` call (r11): the staged DataFrame form
     re-analyzed the accumulated plan at every op boundary (~10
     boundaries over a growing join tree) and cost ~0.2 s of pure driver
@@ -215,7 +188,7 @@ def minhash_near_dups(
     )
 
     sql = f"""
-    WITH {minhash_sig_ctes(text_col, k, hash_fn)},
+    WITH {minhash_sig_ctes(text_col, k)},
     {banded_cte(bands, k)},
     buckets AS (
       SELECT sort_array(collect_list(struct(doc_id, sig))) AS ds

@@ -34,13 +34,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-# Gate on the driver-collected query block (VERDICT r7): 16 384 queries ×
-# dim-64 float64 ≈ 8 MB in the task closure — the upper end of "rides in
-# every task's closure for free". Beyond it EVERY entry point falls back
-# to a fully distributed plan (VERDICT r8 task 5): brute force to the
-# broadcast-join plan, IVF/LSH/multiprobe to in-plan probe assignment
-# (`_ivf_join_plan` / `_lsh_join_plan`) — same emitted bits, no driver
-# collect. Bounded blocks remain the FAST path (the mapInPandas kernel).
+# Gate on the driver-collected query block (VERDICT r7), read at call
+# time: 16 384 queries × dim-64 float64 ≈ 8 MB in the task closure — the
+# upper end of "rides in every task's closure for free". Beyond it EVERY
+# entry point falls back to a fully distributed plan (VERDICT r8 task 5):
+# brute force to the broadcast-join plan, IVF/LSH/multiprobe to in-plan
+# probe assignment (`_ivf_join_plan` / `_lsh_join_plan`) — same emitted
+# bits, no driver collect. Bounded blocks remain the FAST path (the
+# mapInPandas kernel).
 QUERY_BLOCK_MAX = 16_384
 
 
@@ -77,14 +78,6 @@ def fold_cosine(va, vb) -> float | None:
         nb = nb + y * y
     den = math.sqrt(na) * math.sqrt(nb)
     return d / den if den != 0.0 else None  # zero-norm → NULL score
-
-
-def py_dround(x: float, n: int) -> float:
-    """DRIVER-side twin of ``corpus/_util.dround`` (DuckDB's binary
-    ``std::round``): signum(x)·floor(|x|·10^n + 0.5)/10^n with the same
-    IEEE op order, so Python and the JVM expression emit the same bits."""
-    p = float(10**n)
-    return math.copysign(1.0, x) * math.floor(abs(x) * p + 0.5) / p
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -369,14 +362,6 @@ def _flat_dot_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def _dround6(c: Column) -> Column:
-    """Column twin of the in-kernel ``drnd6`` / corpus `_util.dround(…, 6)`
-    (DuckDB's binary std::round): signum·floor(|x|·1e6 + 0.5)/1e6, same
-    IEEE op order, so both paths emit the same bits."""
-    c = c.cast("double")
-    return F.signum(c) * F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-
 def _brute_force_join_plan(
     corpus: DataFrame,
     queries: DataFrame,
@@ -400,6 +385,8 @@ def _brute_force_join_plan(
     both brute-force paths emit an identical schema."""
     from pyspark.sql import Window
 
+    from us_weather_energy_analysis_pipeline_spark.corpus._util import dround
+
     q = queries.select(
         F.col(qid_col).cast("long").alias(qid_col), qvec_col
     ).filter(F.col(qid_col).isNotNull() & F.col(qvec_col).isNotNull())
@@ -412,7 +399,7 @@ def _brute_force_join_plan(
             "cosine",
             F.when(
                 den != F.lit(0.0),
-                _dround6(dot(F.col(vec_col), F.col(qvec_col)) / den),
+                dround(dot(F.col(vec_col), F.col(qvec_col)) / den, 6),
             ),
         )
     )
@@ -452,6 +439,8 @@ def _ivf_join_plan(
     stay a DataFrame, so the query side can itself be big data."""
     from pyspark.sql import Window
 
+    from us_weather_energy_analysis_pipeline_spark.corpus._util import dround
+
     q = queries.select(
         F.col(qid_col).cast("long").alias(qid_col), qvec_col
     ).filter(F.col(qid_col).isNotNull() & F.col(qvec_col).isNotNull())
@@ -470,7 +459,7 @@ def _ivf_join_plan(
             "_cs",
             F.when(
                 cden != F.lit(0.0),
-                _dround6(dot(F.col(qvec_col), F.col("centroid")) / cden),
+                dround(dot(F.col(qvec_col), F.col("centroid")) / cden, 6),
             ),
         )
         .withColumn("_pr", F.row_number().over(w_cell))
@@ -681,14 +670,15 @@ def _lsh_join_plan(
     codes, hyperplane margins, and the Lv et al. single-bit flip set are
     all computed IN-PLAN as one parsed SQL expression — the same
     sequential-fold dots as the driver path, margins compared at 6 dp
-    (``floor(|d|·1e6 + 0.5)/1e6`` — ``py_dround(abs(d), 6)`` for
-    non-negative input) with plane-index tie-break, so the probe CHOICE
-    is identical. Probe codes explode to (qid, qv, code) rows and
+    (``dround_sql`` — ``py_dround(abs(d), 6)`` on the driver) with
+    plane-index tie-break, so the probe CHOICE is identical. Probe codes explode to (qid, qv, code) rows and
     candidates come from an equi-join on the corpus bucket code (a corpus
     row matches at most one probe per query — its own code — so the union
     needs no dedup). NO driver collect. ``n_probes=1`` degenerates to the
     plain bucketed plan (empty flip slice)."""
     from pyspark.sql import Window
+
+    from us_weather_energy_analysis_pipeline_spark.corpus._util import dround_sql
 
     dots_sql = (
         "array(" + ", ".join(_dot_sql(qvec_col, _arr_sql(w)) for w in planes) + ")"
@@ -700,9 +690,9 @@ def _lsh_join_plan(
     ).format(n=len(planes) - 1)
     probes_sql = (
         "concat(array(_code), transform(slice(array_sort(transform(_dots, "
-        "(d, p) -> struct(floor(abs(d) * 1e6 + 0.5) / 1e6 AS m, p AS p))), "
-        "1, {np1}), s -> CAST(_code ^ shiftleft(1, s.p) AS INT)))"
-    ).format(np1=int(n_probes) - 1)
+        f"(d, p) -> struct({dround_sql('abs(d)', 6)} AS m, p AS p))), "
+        f"1, {int(n_probes) - 1}), s -> CAST(_code ^ shiftleft(1, s.p) AS INT)))"
+    )
     qp = (
         queries.select(F.col(qid_col).cast("long").alias(qid_col), qvec_col)
         .filter(F.col(qid_col).isNotNull() & F.col(qvec_col).isNotNull())
@@ -751,10 +741,9 @@ def brute_force_topk(
     vec_col: str = "embedding",
     qid_col: str = "qid",
     qvec_col: str = "qv",
-    max_query_block: int = QUERY_BLOCK_MAX,
 ) -> DataFrame:
     """Exact cosine top-k: collect the GATED query block (never more than
-    ``max_query_block + 1`` driver rows — VERDICT r7), scan the corpus
+    ``QUERY_BLOCK_MAX + 1`` driver rows — VERDICT r7), scan the corpus
     once through the vectorized ``topk_candidates`` kernel, rank per query
     (rounded score + id tie-break → deterministic). 2 jobs (query collect
     + ranked action). An over-threshold query block falls back to the
@@ -763,7 +752,7 @@ def brute_force_topk(
     # NULL query vectors filtered BEFORE the gate — uniform block
     # accounting across all four top-k entry points (ADVICE r8)
     queries = queries.filter(F.col(qvec_col).isNotNull())
-    rows = _collect_query_block(queries, [qid_col, qvec_col], max_query_block)
+    rows = _collect_query_block(queries, [qid_col, qvec_col], QUERY_BLOCK_MAX)
     if rows is None:
         return _brute_force_join_plan(
             corpus, queries, k, id_col, vec_col, qid_col, qvec_col
@@ -1081,8 +1070,8 @@ def assign_nearest_centroid(
                         # in-kernel map-side partial of the Lloyd update:
                         # per winning cell, (count, Σ vectors) — one row
                         # per (batch, cell) leaves Python instead of one
-                        # per corpus row (the centroid_by_label_vectorized
-                        # partial-agg shape, fused into the assign pass)
+                        # per corpus row (a map-side partial aggregate,
+                        # fused into the assign pass)
                         w_lab = lbs[first_idx]
                         for lab_v in np.unique(w_lab):
                             sel = w_lab == lab_v
@@ -1193,7 +1182,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     qid_col: str = "qid",
     qvec_col: str = "qv",
-    max_query_block: int = QUERY_BLOCK_MAX,
     n_probes: int = 1,
     dim: int | None = None,
 ) -> DataFrame:
@@ -1219,7 +1207,7 @@ def ivf_topk(
     action) vs 7 in the old window-assign plan; in-cell scoring runs
     through the vectorized kernel instead of interpreted HOF folds.
 
-    An over-threshold query block (``> max_query_block`` rows after the
+    An over-threshold query block (``> QUERY_BLOCK_MAX`` rows after the
     null-vector filter) falls back to the fully distributed
     ``_ivf_join_plan`` — in-plan probe assignment, no driver collect
     (VERDICT r8 task 5)."""
@@ -1229,7 +1217,7 @@ def ivf_topk(
     # the gate so every entry point accounts the block identically
     # (ADVICE r8: brute/ivf gated unfiltered while lsh gated filtered)
     queries = queries.filter(F.col(qvec_col).isNotNull())
-    qrows = _collect_query_block(queries, [qid_col, qvec_col], max_query_block)
+    qrows = _collect_query_block(queries, [qid_col, qvec_col], QUERY_BLOCK_MAX)
     if qrows is None:
         return _ivf_join_plan(
             corpus, queries, k, label_col, vec_col, id_col, qid_col,
@@ -1243,6 +1231,8 @@ def ivf_topk(
     # family via collect_centroids — review r9: no hand-synced copies)
     cents = collect_centroids(corpus, label_col, vec_col)
     qinfo = []
+
+    from us_weather_energy_analysis_pipeline_spark.corpus._util import py_dround
 
     def _cell_key(qv, c):
         # NULL scores (zero-norm query or centroid) rank LAST, matching
@@ -1322,7 +1312,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     qid_col: str = "qid",
     qvec_col: str = "qv",
-    max_query_block: int = QUERY_BLOCK_MAX,
 ) -> DataFrame:
     """Bucketed ANN: candidates share the query's exact P-bit code, ranked
     by exact cosine within the bucket. Corpus codes are computed in the
@@ -1351,7 +1340,7 @@ def lsh_topk(
     # contract: query vectors are non-null (null rows are dropped — the
     # legacy plan emitted all-null cosines for them, never exercised)
     qinfo = []
-    qrows = _collect_query_block(queries, [qid_col, qvec_col], max_query_block)
+    qrows = _collect_query_block(queries, [qid_col, qvec_col], QUERY_BLOCK_MAX)
     if qrows is None:
         # over-threshold block: fully distributed in-plan code assignment,
         # no driver collect (VERDICT r8 task 5)
@@ -1386,7 +1375,6 @@ def lsh_multiprobe_topk(
     id_col: str = "vec_id",
     qid_col: str = "qid",
     qvec_col: str = "qv",
-    max_query_block: int = QUERY_BLOCK_MAX,
 ) -> DataFrame:
     """Multi-probe hyperplane LSH (Lv et al. 2007): each query probes its
     own code PLUS the ``n_probes − 1`` neighboring codes obtained by
@@ -1416,8 +1404,9 @@ def lsh_multiprobe_topk(
             f"n_probes must be in [1, {n_planes + 1}] (own code + one "
             f"single-bit flip per plane), got {n_probes}"
         )
+    from us_weather_energy_analysis_pipeline_spark.corpus._util import py_dround
 
-    qrows = _collect_query_block(queries, [qid_col, qvec_col], max_query_block)
+    qrows = _collect_query_block(queries, [qid_col, qvec_col], QUERY_BLOCK_MAX)
     if qrows is None:
         # over-threshold block: codes, margins, and the flip set computed
         # in-plan; no driver collect (VERDICT r8 task 5)
@@ -1456,42 +1445,114 @@ def lsh_multiprobe_topk(
     ).select(qid_col, "bucket", id_col, "cosine", "rnk")
 
 
-def _pack_blocks(
-    emb: DataFrame, id_col: str, vec_col: str, grp_col: str = "_grp", fp32: bool = False
-) -> DataFrame:
-    """Pack each ``(grp, bid)`` block into ONE row
-    ``(grp, bid, nb, ids array<bigint>, mat binary)`` — the matrix
-    serialized contiguous (``numpy.tobytes``), so a block-pair task
-    reconstructs both operands with a zero-copy ``frombuffer``.
-    ``fp32=True`` serializes float32 — LOSSLESS when the source column is
-    ``array<float>`` (the caller checks), and it halves the shuffled bytes
-    while letting the block matmul run in sgemm (~2× dgemm).
-    Expects ``bid``/``nb`` columns already assigned (hash-block id and the
-    group's block count)."""
-    import numpy as np
-    import pandas as pd
+# Rows per block of the block-pair verifier: no task holds more than two
+# blocks (~BLOCK_ROWS·dim·8 B each). Read at call time.
+BLOCK_ROWS = 8192
+# The verifier keeps exact cosines down to threshold − _PAIR_MARGIN; the
+# caller applies its final (raw or rounded) threshold to them.
+_PAIR_MARGIN = 1e-6
+_PAIR_SCHEMA = "id_a long, id_b long, cosine double"
 
-    dtype = np.float32 if fp32 else np.float64
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[vec_col].to_numpy()
+def _pair_kernels(vec_col: str, cut: float):
+    """The two in-task kernels both verifier plans run, as closures:
+
+    - ``stack(vals)``: Arrow's per-row vectors → one float64 matrix
+      (array<float> widens exactly), with an actionable error on ragged
+      input instead of numpy's inhomogeneous-shape traceback (r7
+      ragged-embedding fuzz; DuckDB's list_* similarity functions reject
+      mixed lengths the same way);
+    - ``pairs(ids_a, ma, ids_b, mb, same)``: float64 matmul prefilter at
+      ``cut``, id-ordered orientation (upper triangle when both sides
+      are the same block; (min, max) across hash blocks, which are not
+      id-ranged), then the survivors re-scored with the sequential fold
+      — bit-identical to the SQL ``cosine()`` expression (aggregate/
+      zip_with fold left-to-right over doubles, Math.sqrt), so the kept
+      decision agrees exactly with a JVM re-score. Returns
+      ``(id_a, id_b, cosine)`` for exact cosines ``>= cut``.
+
+    Built NESTED on purpose: a module-level helper would be cloudpickled
+    BY REFERENCE, and the Python workers of a driver that merely added
+    this repo to ITS OWN sys.path cannot import the package — the task
+    would die with ModuleNotFoundError. Closures serialize by value and
+    carry no package dependency."""
+
+    def stack(vals):
+        import numpy as np
+
         try:
-            # Arrow hands list<float/double> back as per-row numpy arrays:
-            # vstack is C-speed; fall back for plain-list rows.
-            mat = np.vstack(vals).astype(dtype, copy=False)
+            # vstack is C-speed; fall back for plain-list rows
+            return np.vstack(vals).astype(np.float64, copy=False)
         except (ValueError, TypeError):
             try:
-                mat = np.array([list(v) for v in vals], dtype=dtype)
+                return np.array([list(v) for v in vals], dtype=np.float64)
             except (ValueError, TypeError) as e:
                 lens = sorted({len(v) for v in vals})
-                # actionable failure instead of numpy's inhomogeneous-shape
-                # traceback (r7 ragged-embedding fuzz); DuckDB's list_*
-                # similarity functions reject mixed lengths the same way
                 raise ValueError(
                     f"ragged embedding block in {vec_col!r}: vector "
                     f"lengths {lens} — similarity ops require uniform "
                     "dimensionality"
                 ) from e
+
+    def pairs(ids_a, ma, ids_b, mb, same):
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        na = np.sqrt((ma * ma).sum(axis=1))
+        nb = np.sqrt((mb * mb).sum(axis=1))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = (ma @ mb.T) / np.outer(na, nb)
+        ii, jj = np.nonzero(cos >= cut)
+        a, b = ids_a[ii], ids_b[jj]
+        if same:
+            # the full matrix holds each unordered pair twice
+            keep = a < b
+            ii, jj, lo, hi = ii[keep], jj[keep], a[keep], b[keep]
+        else:
+            lo, hi = np.minimum(a, b), np.maximum(a, b)
+        keep_idx, cvals = [], []
+        for t, (bi, bj) in enumerate(zip(ii, jj)):
+            va, vb = ma[bi].tolist(), mb[bj].tolist()
+            d = 0.0
+            for x, y in zip(va, vb):
+                d = d + x * y
+            sa = 0.0
+            for x in va:
+                sa = sa + x * x
+            sb = 0.0
+            for y in vb:
+                sb = sb + y * y
+            c = d / (math.sqrt(sa) * math.sqrt(sb))
+            if c >= cut:
+                keep_idx.append(t)
+                cvals.append(c)
+        return pd.DataFrame(
+            {
+                "id_a": lo[keep_idx],
+                "id_b": hi[keep_idx],
+                "cosine": np.asarray(cvals, dtype=np.float64),
+            }
+        )
+
+    return stack, pairs
+
+
+def _pack_blocks(
+    emb: DataFrame, id_col: str, vec_col: str, stack, grp_col: str = "_grp"
+) -> DataFrame:
+    """Pack each ``(grp, bid)`` block into ONE row
+    ``(grp, bid, nb, ids array<bigint>, dim, mat binary)`` — the float64
+    matrix serialized contiguous (``numpy.tobytes``), so a block-pair task
+    reconstructs both operands with a zero-copy ``frombuffer``.
+    Expects ``bid``/``nb`` columns already assigned (hash-block id and the
+    group's block count)."""
+    import numpy as np
+    import pandas as pd
+
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        mat = stack(pdf[vec_col].to_numpy())
         return pd.DataFrame(
             {
                 grp_col: [pdf[grp_col].iloc[0]],
@@ -1508,209 +1569,69 @@ def _pack_blocks(
     )
 
 
-def _single_block_pairs(
-    df: DataFrame,
-    threshold: float,
-    grp_col: str,
-    id_col: str,
-    vec_col: str,
-    margin: float,
-    exact: bool,
-) -> DataFrame:
-    """The single-block degenerate of ``grouped_candidate_pairs`` — every
-    group provably fits one block, so pair generation is ONE
-    groupBy(grp).applyInPandas: float64 matmul prefilter at
-    ``threshold - margin``, id-ordered orientation, sequential-fold exact
-    refine — the identical decision sequence the blocked (i==j) task
-    runs, without the sizes-agg / broadcast / pack / pair-join stages.
-    float32 sources load as exactly-widened float64 (the same doubles the
-    blocked path's refine folds over); matmul-vs-fold noise at the cut
-    stays inside the caller-facing margin contract either way."""
-    import numpy as np
-    import pandas as pd
-
-    cut = threshold - margin
-    vc = vec_col
-
-    def gen(pdf: pd.DataFrame) -> pd.DataFrame:
-        def empty():
-            cols = {
-                "id_a": np.empty(0, np.int64),
-                "id_b": np.empty(0, np.int64),
-            }
-            if exact:
-                cols["cosine"] = np.empty(0, np.float64)
-            return pd.DataFrame(cols)
-
-        if len(pdf) < 2:
-            return empty()
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        vals = pdf[vc].to_numpy()
-        try:
-            mat = np.vstack(vals).astype(np.float64, copy=False)
-        except (ValueError, TypeError):
-            try:
-                mat = np.array([list(v) for v in vals], dtype=np.float64)
-            except (ValueError, TypeError) as e:
-                lens = sorted({len(v) for v in vals})
-                raise ValueError(
-                    f"ragged embedding block in {vc!r}: vector "
-                    f"lengths {lens} — similarity ops require uniform "
-                    "dimensionality"
-                ) from e
-        nrm = np.sqrt((mat * mat).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = (mat @ mat.T) / np.outer(nrm, nrm)
-        ii, jj = np.nonzero(cos >= cut)
-        a, b = ids[ii], ids[jj]
-        keep = a < b  # unordered pair once, id-ordered (mirrors i == j)
-        ii, jj, a, b = ii[keep], jj[keep], a[keep], b[keep]
-        if not exact:
-            return pd.DataFrame({"id_a": a, "id_b": b})
-
-        def seq_cosine(va, vb) -> float:
-            # nested on purpose — see the blocked path's closure note
-            import math
-
-            d = 0.0
-            for x, y in zip(va, vb):
-                d = d + x * y
-            na = 0.0
-            for x in va:
-                na = na + x * x
-            nb2 = 0.0
-            for y in vb:
-                nb2 = nb2 + y * y
-            return d / (math.sqrt(na) * math.sqrt(nb2))
-
-        keep_idx, cvals = [], []
-        for t in range(len(a)):
-            c = seq_cosine(mat[ii[t]].tolist(), mat[jj[t]].tolist())
-            if c >= cut:
-                keep_idx.append(t)
-                cvals.append(c)
-        return pd.DataFrame(
-            {
-                "id_a": a[keep_idx],
-                "id_b": b[keep_idx],
-                "cosine": np.asarray(cvals, dtype=np.float64),
-            }
-        )
-
-    schema = "id_a long, id_b long" + (", cosine double" if exact else "")
-    return (
-        df.select(grp_col, id_col, vec_col)
-        .groupBy(grp_col)
-        .applyInPandas(gen, schema)
-    )
-
-
 def grouped_candidate_pairs(
     df: DataFrame,
     threshold: float,
     grp_col: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    margin: float = 1e-6,
-    block_rows: int = 8192,
-    exact: bool = False,
-    persist_input: bool = True,
-    force_blocked: bool = False,
 ) -> DataFrame:
-    """Candidate pairs ``(id_a < id_b)`` with numpy-filtered cosine >=
-    ``threshold - margin``, WITHIN each group of ``grp_col`` — the bounded
-    in-bucket verifier for LSH pipelines.
+    """Pairs ``(id_a < id_b, cosine)`` WITHIN each group of ``grp_col``
+    whose exact sequential-fold cosine is ``>= threshold - 1e-6`` — the
+    bounded in-bucket verifier for LSH pipelines. The final decision (raw
+    ``>= threshold``, or a rounded comparison) belongs to the caller as a
+    filter on ``cosine``, which is bit-identical to a JVM re-score; the
+    survivors are re-scored IN-TASK from the vectors already in hand, so
+    no join back to the source appears in the plan.
 
-    ``persist_input`` (default True) caches the coded input so the two
-    plan branches that read it (sizes agg + block pack) share one
-    upstream execution — the right call when the input fits cluster
-    cache (every corpus/bench scale) or its upstream is expensive
-    (LSH coding CASEs). At 100 TB DO NOT cache the raw corpus: pass
-    ``persist_input=False`` and let both branches re-scan parquet (a
-    columnar scan + cheap projection twice beats materializing the
-    whole corpus into the cache tier), or checkpoint the coded frame to
-    a table first. The packed-blocks persist below stays either way —
-    it is the expensive, already-reduced intermediate both join sides
-    consume.
+    Single-block path (VERDICT r8 task 2): when parquet footer metadata
+    proves the WHOLE input fits one block (``input_rows(df) <=
+    BLOCK_ROWS`` with a row-bounded plan — job-free, and an upper bound
+    on every group's size), pair generation is ONE
+    groupBy(grp).applyInPandas running the in-group upper triangle.
+    Every corpus SF takes it.
 
-    With ``exact=True`` the survivors are re-scored IN-TASK with the
-    sequential fold formula (``_seq_cosine`` — the vectors are already in
-    the block payloads, so no join back to the source is needed) and the
-    output gains a ``cosine`` double column holding that exact value.
-    Rows are still kept down to ``threshold - margin``: the FINAL
-    decision (raw ``>= threshold``, or a rounded comparison) belongs to
-    the caller as a filter on the returned column — the exact value is
-    bit-identical to a JVM re-score, so the decision point is unchanged,
-    just without two extra joins in the plan.
-
-    No task ever holds more than two ``block_rows``-row blocks, regardless
-    of bucket size: group sizes are counted once (tiny agg, broadcast back),
-    each group is hash-split into ``ceil(n/block_rows)`` blocks, and block
-    pairs co-locate via one equi-join on ``(grp, i, j)``. A pathological
-    bucket (everything hashed together) therefore degrades to more block
-    pairs, not to one OOM-ing task. Candidates are approximate (BLAS
-    summation order); callers re-score exactly before acting on them.
-
-    The input (often a non-trivial upstream: LSH coding, projections) is
-    read by two plan branches (sizes agg + pack) and the packed blocks by
-    two more (left/right of the pair join) — both are persisted via
-    operators.cache so no branch re-executes the upstream subtree
-    (exchange reuse measurably does not collapse them).
-
-    Single-block fast path (VERDICT r8 task 2): when parquet footer
-    metadata proves the WHOLE input fits one block (``input_rows(df) <=
-    block_rows`` with a row-bounded plan — job-free, and an upper bound
-    on every group's size), the sizes-agg / broadcast / pack / pair-join
-    machinery is provably all (bid=0, nb=1, i=j=0) and collapses to ONE
-    groupBy(grp).applyInPandas doing the identical in-group upper
-    triangle: same float64 matmul cut, same id-ordered orientation, same
-    sequential-fold exact refine — one exchange instead of five. The
-    footer gate fails at scale (and for non-parquet inputs), so the
-    blocked path stays the 100 TB default."""
+    Blocked path, the only memory-bounded plan for groups larger than one
+    block: no task ever holds more than two ``BLOCK_ROWS``-row blocks.
+    Group sizes are counted once (tiny agg, broadcast back), each group
+    is hash-split into ``ceil(n/BLOCK_ROWS)`` blocks, and block pairs
+    co-locate via one equi-join on ``(grp, i, j)``. A pathological bucket
+    (everything hashed together) degrades to more block pairs, not to one
+    OOM-ing task. The input (often a non-trivial upstream: LSH coding,
+    projections) is read by two plan branches (sizes agg + pack) and the
+    packed blocks by two more (left/right of the pair join) — both are
+    persisted via operators.cache so no branch re-executes the upstream
+    subtree (exchange reuse measurably does not collapse them)."""
     # NULL vectors produce no candidates (r7 embedding null-fuzz: a None
     # row crashed the block-pack np.stack); the e2e pipelines keep such
     # ids as singletons via their outer join, matching the oracle
     df = df.filter(F.col(vec_col).isNotNull())
     import numpy as np
-    import pandas as pd
 
     from us_weather_energy_analysis_pipeline_spark.operators.plan_meta import (
         _plan_row_bounded,
         input_rows,
     )
 
-    # ``force_blocked`` skips the gate — used by growth probes and tests
-    # that must measure/pin the blocked machinery on inputs small enough
-    # for the fast path (a Sample/Filter above the scan does NOT defeat
-    # the gate: both are row-bounded and footer rows stay the bound)
-    if (
-        not force_blocked
-        and input_rows(df) <= block_rows
-        and _plan_row_bounded(df)
-    ):
-        return _single_block_pairs(
-            df, threshold, grp_col, id_col, vec_col, margin, exact
-        )
+    stack, pairs = _pair_kernels(vec_col, threshold - _PAIR_MARGIN)
+    if input_rows(df) <= BLOCK_ROWS and _plan_row_bounded(df):
 
-    from pyspark.sql import types as T
+        def one_block(pdf):
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            mat = stack(pdf[vec_col].to_numpy())
+            return pairs(ids, mat, ids, mat, True)
+
+        return (
+            df.select(grp_col, id_col, vec_col)
+            .groupBy(grp_col)
+            .applyInPandas(one_block, _PAIR_SCHEMA)
+        )
 
     from us_weather_energy_analysis_pipeline_spark.operators import cache
 
-    # float32 fast path: when the source vectors are array<float>, packing
-    # float32 is LOSSLESS (the refine casts back to float64 exactly), the
-    # shuffled matrix bytes halve, and the block matmul runs in sgemm.
-    # The fp32 pre-filter widens the cut by an accumulation-error slack and
-    # every survivor is re-scored in float64 before it is emitted, so the
-    # output contract (float64 cosine >= cut) is unchanged.
-    vec_field = df.schema[vec_col].dataType
-    fp32 = isinstance(vec_field, T.ArrayType) and isinstance(
-        vec_field.elementType, T.FloatType
-    )
-
-    if persist_input:
-        df = cache.track(df)
+    df = cache.track(df)
     sizes = df.groupBy(grp_col).agg(
-        F.ceil(F.count(F.lit(1)) / F.lit(block_rows)).cast("int").alias("nb")
+        F.ceil(F.count(F.lit(1)) / F.lit(BLOCK_ROWS)).cast("int").alias("nb")
     )
     keyed = (
         df.join(F.broadcast(sizes), grp_col)
@@ -1728,7 +1649,7 @@ def grouped_candidate_pairs(
             vec_col,
         )
     )
-    blocks = cache.track(_pack_blocks(keyed, id_col, vec_col, fp32=fp32))
+    blocks = cache.track(_pack_blocks(keyed, id_col, vec_col, stack))
     left = blocks.select(
         F.col("_grp"),
         F.col("bid").alias("i"),
@@ -1746,108 +1667,21 @@ def grouped_candidate_pairs(
         F.col("mat").alias("mat_b"),
     )
     paired = left.join(right, ["_grp", "i", "j"])
-    cut = threshold - margin
 
-    def seq_cosine(va, vb) -> float:
-        """Sequential-fold cosine in Python floats — bit-identical to the
-        SQL ``cosine()`` expression (aggregate/zip_with fold left-to-right
-        over doubles, Math.sqrt, dot / (norm_a · norm_b)), so the in-task
-        refine agrees exactly with a JVM-side re-score of the same pair.
-
-        Defined NESTED (closure) on purpose: a module-level helper would
-        be cloudpickled BY REFERENCE, and the Python workers of a driver
-        that merely added this repo to ITS OWN sys.path cannot import the
-        package — the task would die with ModuleNotFoundError. Closures
-        serialize by value and carry no package dependency."""
-        import math
-
-        d = 0.0
-        for x, y in zip(va, vb):
-            d = d + x * y
-        na = 0.0
-        for x in va:
-            na = na + x * x
-        nb2 = 0.0
-        for y in vb:
-            nb2 = nb2 + y * y
-        return d / (math.sqrt(na) * math.sqrt(nb2))
-
-    np_dtype = np.float32 if fp32 else np.float64
-
-    def gen(batches):
+    def block_pairs(batches):
         for pdf in batches:
             for r in pdf.itertuples(index=False):
                 ids_a = np.asarray(r.ids_a, dtype=np.int64)
                 ids_b = np.asarray(r.ids_b, dtype=np.int64)
-                ma = np.frombuffer(r.mat_a, dtype=np_dtype).reshape(
+                ma = np.frombuffer(r.mat_a, dtype=np.float64).reshape(
                     len(ids_a), r.dim_a
                 )
-                mb = np.frombuffer(r.mat_b, dtype=np_dtype).reshape(
+                mb = np.frombuffer(r.mat_b, dtype=np.float64).reshape(
                     len(ids_b), r.dim_b
                 )
-                na = np.sqrt((ma * ma).sum(axis=1))
-                nb = np.sqrt((mb * mb).sum(axis=1))
-                cos = (ma @ mb.T) / np.outer(na, nb)
-                if fp32:
-                    # widen the cut by the sgemm accumulation-error bound
-                    # (~dim·eps32 relative, padded); float64 re-score of the
-                    # survivors below restores the exact decision boundary
-                    slack = 4.0 * r.dim_a * 1.2e-7 + 1e-6
-                    ii, jj = np.nonzero(cos >= cut - slack)
-                else:
-                    ii, jj = np.nonzero(cos >= cut)
-                a, b = ids_a[ii], ids_b[jj]
-                if r.i == r.j:
-                    # same block on both sides: the full matrix holds each
-                    # unordered pair twice ((x,y) and (y,x)) — keep the
-                    # id-ordered orientation only
-                    keep = a < b
-                    ii, jj, a, b = ii[keep], jj[keep], a[keep], b[keep]
-                    lo, hi = a, b
-                else:
-                    # blocks are hash-assigned, not id-ranged: a cross-block
-                    # hit arrives in one orientation only — normalize to
-                    # (min, max)
-                    lo = np.minimum(a, b)
-                    hi = np.maximum(a, b)
-                if not exact:
-                    if fp32:
-                        # float64 re-score of the survivors (exact cast from
-                        # float32), so candidates carry the same
-                        # ``float64 cosine >= cut`` guarantee as the fp64
-                        # path — up to ~1e-15 summation-order noise (einsum
-                        # here vs BLAS matmul there), which the margin
-                        # semantics already absorb: callers re-score exactly
-                        # before acting on candidates
-                        a64 = ma[ii].astype(np.float64)
-                        b64 = mb[jj].astype(np.float64)
-                        num = np.einsum("ij,ij->i", a64, b64)
-                        den = np.sqrt(np.einsum("ij,ij->i", a64, a64)) * np.sqrt(
-                            np.einsum("ij,ij->i", b64, b64)
-                        )
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            keep = num / den >= cut
-                        lo, hi = lo[keep], hi[keep]
-                    yield pd.DataFrame({"id_a": lo, "id_b": hi})
-                    continue
-                # exact refine on the (few) survivors — vectors are in
-                # hand, so no join back to the source relation
-                keep_idx, cvals = [], []
-                for t, (bi, bj) in enumerate(zip(ii, jj)):
-                    c = seq_cosine(ma[bi].tolist(), mb[bj].tolist())
-                    if c >= cut:  # caller applies the final threshold
-                        keep_idx.append(t)
-                        cvals.append(c)
-                yield pd.DataFrame(
-                    {
-                        "id_a": lo[keep_idx],
-                        "id_b": hi[keep_idx],
-                        "cosine": np.asarray(cvals, dtype=np.float64),
-                    }
-                )
+                yield pairs(ids_a, ma, ids_b, mb, r.i == r.j)
 
-    schema = "id_a long, id_b long" + (", cosine double" if exact else "")
-    return paired.mapInPandas(gen, schema)
+    return paired.mapInPandas(block_pairs, _PAIR_SCHEMA)
 
 
 def cosine_pairs_filter_refine(
@@ -1855,25 +1689,20 @@ def cosine_pairs_filter_refine(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    margin: float = 1e-6,
-    block_rows: int = 8192,
-    force_blocked: bool = False,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with exact cosine >= threshold, via
     DISTRIBUTED block-pair filter-and-refine — no driver collect, no
     full-matrix broadcast (both were the round-1 scale ceiling).
 
-    Stage 1 (pack): rows are hashed into B = ceil(n / block_rows) blocks;
-    each block becomes one (ids, matrix-bytes) row (~block_rows·dim·8 B —
-    half that for array<float> input, which packs lossless float32 and
-    runs the block product in sgemm with a float64 survivor re-score).
+    Stage 1 (pack): rows are hashed into B = ceil(n / BLOCK_ROWS) blocks;
+    each block becomes one (ids, matrix-bytes) row (~BLOCK_ROWS·dim·8 B).
     Stage 2 (pair): block i is exploded to pair keys (i, j≥i) on one side
     and (i≤j, j) on the other; an equi-join on (i, j) co-locates every
     block pair with ONE hash shuffle — each block is replicated ~B/2×,
     the irreducible cost of exact all-pairs, but no task ever holds more
     than two blocks and the driver holds nothing.
     Stage 3 (filter): per block pair, a vectorized numpy product prunes
-    the pair space down to candidates above ``threshold - margin``
+    the pair space down to candidates above ``threshold - 1e-6``
     (upper triangle only when i == j).
     Stage 4 (refine): survivors are re-scored EXACTLY with the sequential
     fold formula (``cosine()`` above), so the result is bit-identical to
@@ -1887,9 +1716,8 @@ def cosine_pairs_filter_refine(
 
     Implemented as ``grouped_candidate_pairs`` with one constant group —
     the same bounded block-pair machinery the LSH pipelines use per
-    bucket (no separate count action, no driver-held sizes). The exact
-    re-score happens IN-TASK (``exact=True`` — the block payloads hold
-    the vectors), so no join back to ``emb`` appears in the plan.
+    bucket (no separate count action, no driver-held sizes), including
+    its single-block path for inputs that fit one block.
     """
     # NULL vectors cannot be scored (r7 embedding null-fuzz: np.stack on a
     # None row crashed the pack kernel); excluded here so every caller —
@@ -1901,8 +1729,4 @@ def cosine_pairs_filter_refine(
         "_g",
         id_col=id_col,
         vec_col=vec_col,
-        margin=margin,
-        block_rows=block_rows,
-        exact=True,
-        force_blocked=force_blocked,
     ).filter(F.col("cosine") >= threshold)
